@@ -14,7 +14,7 @@ timing printed is the end-to-end job, which is the honest number.
 
 Usage:
   python -m implementation_of_an_etl_process_spark.cli \
-      --data-dir /root/reference/data-sample --output /tmp/hypercube.csv
+      --data-dir data-sample --output /tmp/hypercube.csv
 """
 
 from __future__ import annotations
@@ -23,6 +23,8 @@ import argparse
 import os
 import sys
 import time
+
+from implementation_of_an_etl_process_spark.session import default_cpus
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -34,8 +36,8 @@ def main(argv: list[str] | None = None) -> int:
     # worker threads (-t, ETL.java:282) from an I/O pool size (-p,
     # ETL.java:283); under Spark both are the scheduler's task slots,
     # so -p is accepted for CLI parity and the larger of the two wins.
-    ap.add_argument("-t", "--threads", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("-t", "--threads", type=int, default=default_cpus(),
+                    help="default: SPARK_GRAFT_CPUS, else the host's cores")
     ap.add_argument("-p", "--pool-size", type=int, default=None,
                     help="reference-parity alias: max(threads, pool size) "
                          "becomes local parallelism")
@@ -99,7 +101,7 @@ def main(argv: list[str] | None = None) -> int:
         os.path.join(args.data_dir, "invoices.bin"),
         split_bytes=args.split_bytes,
         keep_id=False,  # reference parity (ETL.java:147) AND the id
-        # bytes never cross the Arrow boundary (mapInPandas sources
+        # bytes never cross the Arrow boundary (mapInArrow sources
         # cannot be column-pruned by Catalyst)
     )
     cube = reference_hypercube(

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from implementation_of_an_etl_process_spark.functions.text_exprs import (
     tokens,
@@ -44,6 +45,24 @@ from implementation_of_an_etl_process_spark.plans import spread
 # ---------------------------------------------------------------------------
 # Exact / fingerprint dedup
 # ---------------------------------------------------------------------------
+
+
+def _null_marked(c: Column, t: T.DataType) -> Column:
+    """``c`` with an isnull marker beside every nested value. Spark's
+    hash expressions skip nulls inside arrays and structs too, so
+    without markers ['a', null] hashes like ['a'] and [null] like [].
+    Primitive columns come back unchanged."""
+    if isinstance(t, T.ArrayType):
+        return F.transform(
+            c, lambda x: F.struct(F.isnull(x), _null_marked(x, t.elementType))
+        )
+    if isinstance(t, T.StructType):
+        return F.struct(*[
+            e
+            for f in t.fields
+            for e in (F.isnull(c[f.name]), _null_marked(c[f.name], f.dataType))
+        ])
+    return c
 
 
 def exact_dedup_groups(
@@ -62,19 +81,21 @@ def exact_dedup_groups(
     key columns under different seed prefixes. Typed hashing makes it
     collision-free exactly where groupBy is: arrays/structs hash
     element-wise (the former ``cast('string')`` render merged
-    ['a, b'] with ['a','b']), and float -0.0/NaN normalize the same
-    way UnsafeRow grouping does. Preconditions/limits: MAP-typed keys
-    are rejected (Spark forbids hashing maps — use ``keep_keys=True``);
-    xxhash64 is NOT cryptographic, so adversarially-constructed
-    collisions are conceivable — inputs that need that guarantee
-    should group on the raw keys (``keep_keys=True``). Random-collision
-    odds are the same 2^-128 birthday regime as the previous md5."""
+    ['a, b'] with ['a','b']), nested nulls carry explicit markers
+    (``_null_marked``), and float -0.0/NaN normalize the same way
+    UnsafeRow grouping does. Preconditions/limits: MAP-typed keys, at
+    any nesting depth, are rejected (Spark forbids hashing maps — use
+    ``keep_keys=True``); xxhash64 is NOT cryptographic, so
+    adversarially-constructed collisions are conceivable — inputs that
+    need that guarantee should group on the raw keys
+    (``keep_keys=True``). Random-collision odds are the same 2^-128
+    birthday regime as the previous md5."""
     if keep_keys:
         return df.groupBy(*keys).agg(
             F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("n_dups")
         )
     for k, t in df.select(*keys).dtypes:
-        if t.startswith("map<"):
+        if "map<" in t:
             raise ValueError(
                 f"key column {k!r} is MAP-typed: Spark cannot hash maps "
                 "— use keep_keys=True (raw-key grouping) instead"
@@ -86,8 +107,8 @@ def exact_dedup_groups(
     # placement part of the fingerprint exactly as it is part of the
     # groupBy key
     cols: list = []
-    for k in keys:
-        cols += [F.isnull(F.col(k)), F.col(k)]
+    for f in df.select(*keys).schema.fields:
+        cols += [F.isnull(F.col(f.name)), _null_marked(F.col(f.name), f.dataType)]
     fp = F.struct(
         F.xxhash64(F.lit(0), *cols).alias("h0"),
         F.xxhash64(F.lit(1), *cols).alias("h1"),

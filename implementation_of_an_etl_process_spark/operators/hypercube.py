@@ -19,12 +19,17 @@ it is a parameterized builder:
   (single granularity only, ``hypercube.sql:14``).
 
 Scale notes (100 TB discipline):
-- Exact COUNT(DISTINCT x, y) forces an Expand (row duplication per
-  distinct aggregate). ``distinct_mode="approx"`` switches to HLL++
+- The exact single-granularity cube needs no COUNT(DISTINCT): a
+  three-level functional-dependency rewrite turns both distinct counts
+  into plain counts (see ``reference_hypercube``).
+- Exact ``rollup``/``cube`` keep COUNT(DISTINCT x, y), which forces an
+  Expand (row duplication per distinct aggregate).
+  ``distinct_mode="approx"`` switches to HLL++
   (``approx_count_distinct``; Heule/Nunkesser/Hall, "HyperLogLog in
   practice", 2013), the right answer at cluster scale.
-- Dimension tables broadcast; only the final aggregate shuffles, keyed
-  by the group columns. With AQE, skewed group keys re-split.
+- Dimension tables broadcast; the fact side shuffles only inside the
+  aggregates, keyed by their group columns. With AQE, skewed group keys
+  re-split.
 """
 
 from __future__ import annotations
@@ -40,8 +45,6 @@ from implementation_of_an_etl_process_spark.plans import maybe_broadcast
 def denormalize(
     fact: DataFrame,
     dims: Sequence[tuple[DataFrame, Column | str, str]],
-    *,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Chain dimension joins onto a fact table.
 
@@ -54,8 +57,7 @@ def denormalize(
     """
     out = fact
     for dim, on, how in dims:
-        side = maybe_broadcast(dim) if broadcast_dims else dim
-        out = out.join(side, on, how)
+        out = out.join(maybe_broadcast(dim), on, how)
     return out
 
 
@@ -65,7 +67,6 @@ def build_cube(
     measures: Sequence[Column],
     *,
     grouping: str = "groupby",
-    ordered: bool = True,
 ) -> DataFrame:
     """Aggregate measures over dimension columns.
 
@@ -83,144 +84,10 @@ def build_cube(
         grouped = df.cube(*dims)
     else:
         raise ValueError(f"unknown grouping {grouping!r}")
-    out = grouped.agg(*measures)
-    if ordered:
-        # The reference emits rows in ascending dim order for free from
-        # its dense layout (ETL.java:259-264); declarative engines pay
-        # one explicit sort.
-        out = out.orderBy(*dims)
-    return out
-
-
-def _packable_dims(clients: DataFrame, contracts: DataFrame) -> bool:
-    """Eagerly verify the dimension tables fit the packed-key budgets.
-
-    Two tiny aggregates over the dimension tables only (never the fact
-    table) — the same price the reference pays to size its dense arrays
-    up front (``ETL.java:96-105`` scans dims once for max ids/domains).
-    Budgets: type/misc/nature in [0,256); geo in [0, 2^30);
-    client id in [0, 2^45); contract id in [0, 2^54).
-    """
-    int_types = {"int", "bigint", "smallint", "tinyint"}
-    cl = dict(clients.dtypes)
-    ct = dict(contracts.dtypes)
-    needed_cl = {"id", "type", "geo", "misc"}
-    needed_ct = {"id", "id_client", "nature"}
-    if not (
-        needed_cl <= cl.keys()
-        and needed_ct <= ct.keys()
-        and all(cl[c] in int_types for c in needed_cl)
-        and all(ct[c] in int_types for c in needed_ct)
-    ):
-        return False
-    b = clients.agg(
-        F.min("id"), F.max("id"), F.min("type"), F.max("type"),
-        F.min("geo"), F.max("geo"), F.min("misc"), F.max("misc"),
-    ).first()
-    c = contracts.agg(F.min("id"), F.max("id"), F.min("nature"), F.max("nature")).first()
-    if b is None or c is None or any(v is None for v in (*b, *c)):
-        return False
-    return (
-        0 <= b[0] and b[1] < 1 << 45
-        and 0 <= b[2] and b[3] < 256
-        and 0 <= b[4] and b[5] < 1 << 30
-        and 0 <= b[6] and b[7] < 256
-        and 0 <= c[0] and c[1] < 1 << 54
-        and 0 <= c[2] and c[3] < 256
-    )
-
-
-def _packed_reference_cube(
-    clients: DataFrame, contracts: DataFrame, invoices: DataFrame
-) -> DataFrame:
-    """Three-level exact cube with every group key packed into ONE int64.
-
-    This is the reference's dense-index trick (``ETL.java:116-119``
-    precomputes ``index = ((geo*ntypes+type)*nmisc+misc)...`` so every
-    aggregate addresses a flat array) expressed Spark-first: instead of
-    a dense array we give Tungsten a single long grouping key, so
-
-    - every HashAggregate hashes/compares 8 fixed bytes instead of a
-      multi-column row (lvl1: (contract,time) -> ``contract<<8|time8``;
-      lvl2: (client,nature,time) -> ``client<<16|nature<<8|time8``;
-      final: (geo,type,misc,nature,time) -> bit-packed, lexicographic),
-    - the broadcast maps carry one long payload instead of 2-3 columns,
-    - the final ORDER BY dims collapses to a sort on one long (the
-      packing is order-preserving: higher dims occupy higher bits).
-
-    ``time8 = time + 128`` maps the signed byte (reference record
-    format, ``README.md:66``) onto [0,256) order-preservingly; a time
-    outside byte range raises rather than mis-packing. Dimension-side
-    budgets are pre-checked by ``_packable_dims``.
-    """
-    t_ok = (F.col("time") >= -128) & (F.col("time") <= 127)
-    pack1 = F.col("id_contract").cast("long") * 256 + F.col("time") + 128
-    k1 = F.when(t_ok, pack1).otherwise(
-        F.raise_error(F.lit("packed cube: time outside signed-byte range"))
-    )
-    lvl1 = (
-        invoices.select(k1.alias("k1"), "amount", "consumption")
-        .groupBy("k1")
-        .agg(
-            F.sum("consumption").alias("_c"),
-            F.sum(F.col("amount").cast("double")).alias("_a"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-    )
-    # contract -> (client, nature) packed to the HIGH bits of the lvl2
-    # key; adding the low byte of k1 (= time8) completes the key.
-    cmap = contracts.select(
-        F.col("id").cast("long").alias("contract_id"),
-        (F.col("id_client").cast("long") * 65536
-         + F.col("nature").cast("long") * 256).alias("_c2"),
-    )
-    lvl2 = (
-        lvl1.withColumn("contract_id", F.shiftright(F.col("k1"), 8))
-        .join(maybe_broadcast(cmap), "contract_id", "inner")
-        .select(
-            (F.col("_c2") + F.col("k1").bitwiseAND(F.lit(255))).alias("k2"),
-            "_c", "_a", "_n",
-        )
-        .groupBy("k2")
-        .agg(
-            F.sum("_c").alias("_c"),
-            F.sum("_a").alias("_a"),
-            F.sum("_n").alias("_n"),
-            F.count(F.lit(1)).alias("_nk"),
-        )
-    )
-    # client -> (geo,type,misc) packed ABOVE the (nature,time8) low 16
-    # bits, lexicographic in dim order: geo<<32 | type<<24 | misc<<16.
-    kmap = clients.select(
-        F.col("id").cast("long").alias("client_id"),
-        (F.col("geo").cast("long") * 4294967296
-         + F.col("type").cast("long") * 16777216
-         + F.col("misc").cast("long") * 65536).alias("_g"),
-    )
-    final = (
-        lvl2.withColumn("client_id", F.shiftright(F.col("k2"), 16).cast("long"))
-        .join(maybe_broadcast(kmap), "client_id", "inner")
-        .select(
-            (F.col("_g") + F.col("k2").bitwiseAND(F.lit(65535))).alias("kf"),
-            "_c", "_a", "_n", "_nk",
-        )
-        .groupBy("kf")
-        .agg(
-            F.sum("_c").cast("long").alias("consumption"),
-            F.round(F.sum("_a"), 2).alias("amount"),
-            F.count(F.lit(1)).cast("long").alias("nclients"),
-            F.sum("_nk").cast("long").alias("ncontracts"),
-            F.sum("_n").alias("ninvoices"),
-        )
-    )
-    return final.orderBy("kf").select(
-        F.shiftright(F.col("kf"), 32).cast("int").alias("geo"),
-        F.shiftright(F.col("kf"), 24).bitwiseAND(F.lit(255)).cast("int").alias("type"),
-        F.shiftright(F.col("kf"), 16).bitwiseAND(F.lit(255)).cast("int").alias("misc"),
-        F.shiftright(F.col("kf"), 8).bitwiseAND(F.lit(255)).cast("int").alias("nature"),
-        (F.col("kf").bitwiseAND(F.lit(255)) - 128).cast("int").alias("time"),
-        "consumption", "amount", "nclients", "ncontracts", "ninvoices",
-    )
+    # The reference emits rows in ascending dim order for free from its
+    # dense layout (ETL.java:259-264); declarative engines pay one
+    # explicit sort.
+    return grouped.agg(*measures).orderBy(*dims)
 
 
 def reference_hypercube(
@@ -230,7 +97,6 @@ def reference_hypercube(
     *,
     distinct_mode: str = "exact",
     grouping: str = "groupby",
-    packed: bool | str = "auto",
 ) -> DataFrame:
     """The reference query (``hypercube.sql:1-14``), Spark-first.
 
@@ -238,59 +104,9 @@ def reference_hypercube(
     at ``ETL.java:258``; we use the SQL alias spelling ``ncontracts``,
     not the header typo ``ncontrats``).
     """
-    if distinct_mode not in ("exact", "approx", "exact_expand"):
+    if distinct_mode not in ("exact", "approx"):
         raise ValueError(f"unknown distinct_mode {distinct_mode!r}")
-    if packed not in (True, False, "auto"):
-        raise ValueError(f"unknown packed mode {packed!r}")
 
-    # Packed-key fast path (see _packed_reference_cube): applies to the
-    # exact single-granularity cube when the dims fit the bit budgets.
-    # ``packed=True`` forces (raises if the dims don't fit); ``"auto"``
-    # probes the dimension tables (two tiny aggregates) and falls back.
-    if packed and distinct_mode == "exact" and grouping == "groupby":
-        if _packable_dims(clients, contracts):
-            return _packed_reference_cube(clients, contracts, invoices)
-        if packed is True:
-            raise ValueError(
-                "packed=True but dimension values exceed the packed-key "
-                "bit budgets (see _packable_dims)"
-            )
-    elif packed is True:
-        raise ValueError(
-            "packed=True requires distinct_mode='exact' and grouping='groupby'"
-        )
-
-    enriched = (
-        contracts.select(
-            F.col("id").alias("contract_id"),
-            F.col("id_client").alias("client_id"),
-            "nature",
-        )
-        # J1 (ETL.java:94-111): denormalize client dims onto contracts so
-        # the fact scan probes ONE broadcast map, like the reference's
-        # precomputed contractIndex (ETL.java:109).
-        .join(
-            maybe_broadcast(
-                clients.select(
-                    F.col("id").alias("client_id"), "type", "geo", "misc"
-                )
-            ),
-            "client_id",
-            "inner",
-        )
-    )
-    joined = denormalize(
-        # J2 (ETL.java:153): probe with the streamed fact side. Invoice
-        # id is discarded here like the reference's decoder (ETL.java:147)
-        # — Catalyst prunes it out of the scan entirely.
-        invoices.select(
-            F.col("id_contract").alias("contract_id"),
-            "time",
-            "amount",
-            "consumption",
-        ),
-        [(enriched, "contract_id", "inner")],
-    )
     dims = ["geo", "type", "misc", "nature", "time"]
     if distinct_mode == "exact" and grouping == "groupby":
         # Three-level functional-dependency rewrite — NO distinct
@@ -349,23 +165,53 @@ def reference_hypercube(
         client_map = clients.select(
             F.col("id").alias("client_id"), "type", "geo", "misc"
         )
-        post = denormalize(lvl2, [(client_map, "client_id", "inner")])
-        return (
-            post.groupBy(*dims)
-            .agg(
+        return build_cube(
+            denormalize(lvl2, [(client_map, "client_id", "inner")]),
+            dims,
+            [
                 F.sum("_c").cast("long").alias("consumption"),
                 F.round(F.sum("_a"), 2).alias("amount"),
                 F.count(F.lit(1)).cast("long").alias("nclients"),
                 F.sum("_nk").cast("long").alias("ncontracts"),
                 F.sum("_n").alias("ninvoices"),
-            )
-            .orderBy(*dims)
+            ],
         )
 
+    enriched = (
+        contracts.select(
+            F.col("id").alias("contract_id"),
+            F.col("id_client").alias("client_id"),
+            "nature",
+        )
+        # J1 (ETL.java:94-111): denormalize client dims onto contracts so
+        # the fact scan probes ONE broadcast map, like the reference's
+        # precomputed contractIndex (ETL.java:109).
+        .join(
+            maybe_broadcast(
+                clients.select(
+                    F.col("id").alias("client_id"), "type", "geo", "misc"
+                )
+            ),
+            "client_id",
+            "inner",
+        )
+    )
+    joined = denormalize(
+        # J2 (ETL.java:153): probe with the streamed fact side. Invoice
+        # id is discarded here like the reference's decoder (ETL.java:147)
+        # — Catalyst prunes it out of the scan entirely.
+        invoices.select(
+            F.col("id_contract").alias("contract_id"),
+            "time",
+            "amount",
+            "consumption",
+        ),
+        [(enriched, "contract_id", "inner")],
+    )
     if distinct_mode == "approx":
         nclients = F.approx_count_distinct("client_id")
         ncontracts = F.approx_count_distinct("contract_id")
-    else:  # exact_expand: the planner's Expand-based exact path
+    else:  # exact rollup/cube: the planner's Expand-based exact path
         nclients = F.countDistinct("client_id")
         ncontracts = F.countDistinct("contract_id")
     return build_cube(

@@ -828,17 +828,21 @@ def encode_pq(
 def _flat_matrix(list_col, dtype):
     """(B, d) matrix from an Arrow list column — flatten (offset/
     null-safe) + reshape over the contiguous values buffer; no per-row
-    Python objects (guide §4.2). Rows must be equal-width (vectors and
-    PQ codes are, by construction); the reshape guard turns a violated
-    invariant into a loud error instead of a silent mis-slice."""
+    Python objects (guide §4.2). Rows must be non-null and equal-width
+    (vectors and PQ codes are, by construction); the guard checks both
+    from the list lengths, turning a violated invariant into a loud
+    error instead of a silent mis-slice."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    flat = list_col.flatten().to_numpy(zero_copy_only=False)
     n = len(list_col)
-    if n == 0 or flat.size % n:
+    widths = pc.list_value_length(list_col)
+    if n == 0 or list_col.null_count or pc.count_distinct(widths).as_py() != 1:
         raise ValueError(
-            f"ragged list column: {flat.size} values over {n} rows"
+            f"list column with null or ragged rows ({n} rows, "
+            f"{list_col.null_count} null)"
         )
+    flat = list_col.flatten().to_numpy(zero_copy_only=False)
     return flat.astype(dtype, copy=False).reshape(n, flat.size // n)
 
 

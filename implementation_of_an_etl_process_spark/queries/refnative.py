@@ -34,6 +34,7 @@ from implementation_of_an_etl_process_spark.operators.hypercube import (
 )
 from implementation_of_an_etl_process_spark.sources.parquet import read_table
 from implementation_of_an_etl_process_spark.sources.binary import (
+    INVOICE_DTYPE,
     read_invoices_bin,
 )
 from implementation_of_an_etl_process_spark.sources.sinks import (
@@ -68,17 +69,7 @@ def _synth_bin(sf_dir: str) -> str:
         os.path.join(sf_dir, "lineitem.parquet"),
         columns=["l_orderkey", "l_shipdate", "l_quantity", "l_extendedprice"],
     ).to_pandas()
-    rec = np.zeros(
-        len(t),
-        dtype=[
-            ("id", ">i4"),
-            ("id_contract", ">i4"),
-            ("time", "i1"),
-            ("amount", ">f4"),
-            ("consumption", ">i2"),
-            ("pad", "V1"),
-        ],
-    )
+    rec = np.zeros(len(t), dtype=INVOICE_DTYPE)
     rec["id"] = np.arange(len(t), dtype=np.int64)
     rec["id_contract"] = t["l_orderkey"].to_numpy()
     rec["time"] = t["l_shipdate"].dt.month.to_numpy()

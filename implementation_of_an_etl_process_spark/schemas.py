@@ -49,10 +49,6 @@ INVOICES = T.StructType(
     ]
 )
 
-# Binary record layout for the fixed-width fact file.
-INVOICE_RECORD_LEN = 16
-INVOICE_STRUCT_FMT = ">iibfhx"  # big-endian: int,int,byte,float,short,pad
-
 # Output cube schema (reference ETL.java:258; header spells `ncontrats`).
 HYPERCUBE = T.StructType(
     [

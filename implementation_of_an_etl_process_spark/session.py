@@ -1,6 +1,8 @@
 """SparkSession factory with scale-aware defaults.
 
-Local-mode knobs are sized from ``SPARK_GRAFT_CPUS`` (default 32); on a
+Local-mode knobs are sized from the host: cores from the CPU affinity
+mask (override: ``SPARK_GRAFT_CPUS``), the driver heap from the cgroup
+memory limit or physical RAM (override: ``SPARK_DRIVER_MEMORY``). On a
 real cluster the same settings (AQE on, adaptive coalescing, skew-join
 handling) are the ones that matter at 100 TB — partition counts are then
 driven by AQE rather than the static ``spark.sql.shuffle.partitions``.
@@ -13,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "implementation-of-an-etl-process-spark"
+
+# Local-mode heap: this share of host memory, never more than the cap.
+# The rest stays for the JVM's off-heap use, the Python workers (one per
+# core) and the page cache.
+HEAP_SHARE = 0.4
+HEAP_CAP_MB = 48 * 1024
+
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
 
 # Session confs the engine's queries rely on. All runtime-settable, so
 # they can be applied to a session the engine didn't create (e.g. the
@@ -33,6 +46,42 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """Task slots for local mode: ``SPARK_GRAFT_CPUS``, else the cores
+    this process may run on."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: physical RAM, lowered to the cgroup
+    limit when one is set (an unlimited cgroup reads as "max" or as a
+    huge number, which the min ignores)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                limit = fh.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def default_driver_memory() -> str:
+    """Local-mode driver heap: ``SPARK_DRIVER_MEMORY``, else
+    ``HEAP_SHARE`` of host memory capped at ``HEAP_CAP_MB``."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    mb = min(HEAP_CAP_MB, int(host_memory_bytes() * HEAP_SHARE) >> 20)
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     *,
@@ -47,7 +96,7 @@ def get_spark(
     the behaviors that keep one static config valid from sf0.001 tests
     to a 1000-executor cluster.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -79,12 +128,10 @@ def get_spark(
         "spark.sql.execution.arrow.maxRecordsPerBatch",
         os.environ.get("SPARK_GRAFT_ARROW_BATCH", "131072"),
     )
-    # Local mode: single JVM, driver memory is the only pool. Guard with
-    # an env override so constrained environments can shrink it.
+    # Local mode: single JVM, driver memory is the only pool, so it is
+    # sized from the host rather than fixed.
     if master.startswith("local"):
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g")
-        )
+        builder = builder.config("spark.driver.memory", default_driver_memory())
         # Shuffle/spill files on tmpfs when available: measured 2x
         # end-to-end on shuffle-heavy full-scale runs vs /tmp-on-disk.
         # (On a real cluster the analogous setting is local NVMe for

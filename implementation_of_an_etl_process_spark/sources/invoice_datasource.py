@@ -1,15 +1,18 @@
 """Spark 4 Python DataSource for the fixed-width binary invoice format.
 
-The polished alternative to ``binary.read_invoices_bin``'s
-mapInPandas-over-splits: a first-class source usable as
+A first-class source and sink over the same record dtype, split planner
+and decoder as ``binary.read_invoices_bin`` (the batch reader the
+pipeline uses), usable as
 
     spark.dataSource.register(InvoiceBinaryDataSource)
     spark.read.format("invoicebin").option("path", p).load()
+    spark.readStream.format("invoicebin").option("path", dir).load()
+    df.write.format("invoicebin").option("path", dir).save()
 
-``partitions()`` is the same metadata-only split planning; ``read()``
-yields Arrow RecordBatches decoded by the same vectorized numpy view —
-so each task streams batches without per-row Python. On a cluster the
-source parallelizes identically to a parquet scan (one task per split).
+``partitions()`` is the metadata-only split plan; ``read()`` yields the
+Arrow RecordBatches of ``binary.decode`` — so each task streams batches
+without per-row Python. On a cluster the source parallelizes
+identically to a parquet scan (one task per split).
 
 Record layout (reference README.md:66, decode ETL.java:147-152):
 16-byte big-endian — int id, int id_contract, byte time, float amount,
@@ -32,8 +35,14 @@ from pyspark.sql.datasource import (
 )
 
 from implementation_of_an_etl_process_spark import schemas
-
-DEFAULT_SPLIT_BYTES = 32 * 1024 * 1024
+from implementation_of_an_etl_process_spark.sources.binary import (
+    DEFAULT_SPLIT_BYTES,
+    INVOICE_DTYPE,
+    RECORD_LEN,
+    decode,
+    plan_splits,
+    split_ranges,
+)
 
 
 class InvoiceSplit(InputPartition):
@@ -49,106 +58,15 @@ class InvoiceBinaryReader(DataSourceReader):
         if not self.path:
             raise ValueError("invoicebin source requires option 'path'")
         self.split_bytes = int(options.get("split_bytes", DEFAULT_SPLIT_BYTES))
-        if self.split_bytes % schemas.INVOICE_RECORD_LEN:
-            raise ValueError("split_bytes must be a multiple of 16")
 
     def partitions(self) -> Sequence[InputPartition]:
-        files = (
-            sorted(glob.glob(self.path))
-            if any(c in self.path for c in "*?[")
-            else [self.path]
-        )
-        if not files:
-            raise FileNotFoundError(f"no files match {self.path!r}")
-        # Writer-produced directories carry a _SUCCESS commit marker;
-        # part-files without one mean a partially-committed overwrite
-        # (driver crash mid-commit) — fail loudly instead of silently
-        # reading partial data. Raw reference-style .bin files (not
-        # named part-*.bin) are exempt.
-        for d in {os.path.dirname(f) for f in files}:
-            parts = [
-                b for b in os.listdir(d or ".")
-                if b.startswith("part-") and b.endswith(".bin")
-            ]
-            if parts and not os.path.exists(
-                os.path.join(d, "_SUCCESS")
-            ):
-                raise ValueError(
-                    f"{d}: part-*.bin present but no _SUCCESS marker — "
-                    "the directory holds a partially-committed write; "
-                    "re-run the writer (overwrite) to repair"
-                )
-        out: list[InputPartition] = []
-        for f in files:
-            size = os.path.getsize(f)
-            if size % schemas.INVOICE_RECORD_LEN:
-                raise ValueError(f"{f}: size {size} not a multiple of 16")
-            for off in range(0, size, self.split_bytes):
-                out.append(
-                    InvoiceSplit(f, off, min(self.split_bytes, size - off))
-                )
-        return out
+        return [
+            InvoiceSplit(*split)
+            for split in plan_splits(self.path, self.split_bytes)
+        ]
 
     def read(self, partition: InvoiceSplit) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-
-        dtype = np.dtype(
-            [
-                ("id", ">i4"),
-                ("id_contract", ">i4"),
-                ("time", "i1"),
-                ("amount", ">f4"),
-                ("consumption", ">i2"),
-                ("pad", "V1"),
-            ]
-        )
-        with open(partition.path, "rb") as fh:
-            fh.seek(partition.offset)
-            buf = fh.read(partition.nbytes)
-        arr = np.frombuffer(buf, dtype=dtype)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(arr["id"].astype("int32")),
-                pa.array(arr["id_contract"].astype("int32")),
-                pa.array(arr["time"].astype("int32")),
-                pa.array(arr["amount"].astype("float32")),
-                pa.array(arr["consumption"].astype("int32")),
-            ],
-            names=["id", "id_contract", "time", "amount", "consumption"],
-        )
-
-
-def _decode_range(path: str, offset: int, nbytes: int):
-    """Shared vectorized decode of a byte range (same numpy view as the
-    batch reader)."""
-    import numpy as np
-    import pyarrow as pa
-
-    dtype = np.dtype(
-        [
-            ("id", ">i4"),
-            ("id_contract", ">i4"),
-            ("time", "i1"),
-            ("amount", ">f4"),
-            ("consumption", ">i2"),
-            ("pad", "V1"),
-        ]
-    )
-    with open(path, "rb") as fh:
-        fh.seek(offset)
-        buf = fh.read(nbytes)
-    arr = np.frombuffer(buf, dtype=dtype)
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(arr["id"].astype("int32")),
-            pa.array(arr["id_contract"].astype("int32")),
-            pa.array(arr["time"].astype("int32")),
-            pa.array(arr["amount"].astype("float32")),
-            pa.array(arr["consumption"].astype("int32")),
-        ],
-        names=["id", "id_contract", "time", "amount", "consumption"],
-    )
+        return decode(partition.path, partition.offset, partition.nbytes)
 
 
 class InvoiceBinaryStreamReader(DataSourceStreamReader):
@@ -169,8 +87,6 @@ class InvoiceBinaryStreamReader(DataSourceStreamReader):
         if not self.dir:
             raise ValueError("invoicebin stream requires option 'path'")
         self.split_bytes = int(options.get("split_bytes", DEFAULT_SPLIT_BYTES))
-        if self.split_bytes % schemas.INVOICE_RECORD_LEN:
-            raise ValueError("split_bytes must be a multiple of 16")
 
     def initialOffset(self) -> dict:
         return {"files": {}}
@@ -184,18 +100,19 @@ class InvoiceBinaryStreamReader(DataSourceStreamReader):
         sizes = {}
         for f in sorted(glob.glob(pattern)):
             size = os.path.getsize(f)
-            sizes[f] = size - size % schemas.INVOICE_RECORD_LEN
+            sizes[f] = size - size % RECORD_LEN
         return {"files": sizes}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         seen = start.get("files", {})
-        out: list[InputPartition] = []
-        for f, upto in end.get("files", {}).items():
-            lo = seen.get(f, 0)
-            for off in range(lo, upto, self.split_bytes):
-                out.append(
-                    InvoiceSplit(f, off, min(self.split_bytes, upto - off))
-                )
+        spans = [
+            (f, seen.get(f, 0), upto)
+            for f, upto in end.get("files", {}).items()
+        ]
+        out: list[InputPartition] = [
+            InvoiceSplit(*split)
+            for split in split_ranges(spans, self.split_bytes)
+        ]
         if not out:  # Spark requires >= 1 partition per batch
             out.append(InvoiceSplit("", 0, 0))
         return out
@@ -203,9 +120,7 @@ class InvoiceBinaryStreamReader(DataSourceStreamReader):
     def read(self, partition: InvoiceSplit):
         if not partition.path:
             return iter(())
-        return _decode_range(
-            partition.path, partition.offset, partition.nbytes
-        )
+        return decode(partition.path, partition.offset, partition.nbytes)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are recomputable from the filesystem
@@ -266,16 +181,6 @@ class InvoiceBinaryArrowWriter(DataSourceArrowWriter):
 
         import numpy as np
 
-        dtype = np.dtype(
-            [
-                ("id", ">i4"),
-                ("id_contract", ">i4"),
-                ("time", "i1"),
-                ("amount", ">f4"),
-                ("consumption", ">i2"),
-                ("pad", "V1"),
-            ]
-        )
         os.makedirs(self.dir, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.bin"
         tmp = os.path.join(self.dir, f"._tmp_{name}")
@@ -289,7 +194,7 @@ class InvoiceBinaryArrowWriter(DataSourceArrowWriter):
                         "invoicebin: 'time' outside the format's int8 "
                         f"range [-128, 127]: min={t.min()} max={t.max()}"
                     )
-                rec = np.zeros(batch.num_rows, dtype=dtype)
+                rec = np.zeros(batch.num_rows, dtype=INVOICE_DTYPE)
                 rec["id"] = cols["id"]
                 rec["id_contract"] = cols["id_contract"]
                 rec["time"] = t

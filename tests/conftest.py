@@ -1,10 +1,12 @@
-"""Shared pytest fixtures: one SparkSession per test run."""
+"""Shared pytest fixtures: one SparkSession per test run, the test
+datasets, and the DataFrame-vs-oracle comparison."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -12,6 +14,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 REF_SAMPLE = "/root/reference/data-sample"
+
+# The reference's invoice record (README.md:66), spelled out here rather
+# than imported so the tests' decoder stays independent of the engine's.
+INVOICE_RECORD = np.dtype(
+    [
+        ("id", ">i4"),
+        ("id_contract", ">i4"),
+        ("time", "i1"),
+        ("amount", ">f4"),
+        ("consumption", ">i2"),
+        ("pad", "V1"),
+    ]
+)
 
 
 @pytest.fixture(scope="session")
@@ -22,6 +37,49 @@ def spark():
     # tiny-fixture jobs snappy (AQE coalesces anyway).
     spark = get_spark("pytest", shuffle_partitions=8)
     yield spark
+
+
+@pytest.fixture(scope="session")
+def ref_sample(tmp_path_factory) -> str:
+    """Directory with the reference layout: clients.csv, contracts.csv
+    and invoices.bin (16-byte big-endian records). The reference's own
+    sample when present, else a seeded star schema written once per
+    session. The generated one keeps the traits the tests lean on: a
+    few invoice ids repeat, some invoices name no contract, some
+    contracts name no client, and ``time`` includes negative bytes."""
+    if os.path.isdir(REF_SAMPLE):
+        return REF_SAMPLE
+    import pandas as pd
+
+    out = tmp_path_factory.mktemp("ref_sample")
+    rng = np.random.default_rng(20141001)
+    n_clients, n_contracts, n_invoices = 1_500, 4_000, 58_176
+    pd.DataFrame(
+        {
+            "id": np.arange(1, n_clients + 1),
+            "type": rng.integers(1, 6, n_clients),
+            "geo": rng.integers(1, 41, n_clients),
+            "misc": rng.integers(1, 7, n_clients),
+        }
+    ).to_csv(out / "clients.csv", index=False)
+    pd.DataFrame(
+        {
+            "id": np.arange(1, n_contracts + 1),
+            "id_client": rng.integers(1, n_clients + 11, n_contracts),
+            "nature": rng.integers(1, 6, n_contracts),
+            "start": 201410,
+            "end": 201710,
+        }
+    ).to_csv(out / "contracts.csv", index=False)
+    rec = np.zeros(n_invoices, dtype=INVOICE_RECORD)
+    rec["id"] = np.arange(1, n_invoices + 1)
+    rec["id"][-100:] = rec["id"][:100]
+    rec["id_contract"] = rng.integers(1, n_contracts + 21, n_invoices)
+    rec["time"] = rng.integers(-3, 37, n_invoices)
+    rec["amount"] = rng.integers(-500, 100_000, n_invoices) / 100
+    rec["consumption"] = rng.integers(0, 32_000, n_invoices)
+    rec.tofile(out / "invoices.bin")
+    return str(out)
 
 
 @pytest.fixture(scope="session")

@@ -1,29 +1,19 @@
 """CLI end-to-end (D1): run the real `python -m ...cli` entrypoint on
-the reference's own sample and check the reference-format output file
+the reference-layout sample (``conftest.ref_sample``) and check the reference-format output file
 against an independent DuckDB + numpy oracle, byte-semantics included
 (`ncontrats` header, `#.00` amount format, dim-ordered rows)."""
 
 from __future__ import annotations
 
-import os
-
-import duckdb
-import pytest
-
 from implementation_of_an_etl_process_spark import cli
-from tests.conftest import REF_SAMPLE
-from tests.test_hypercube_golden import ORACLE_SQL, decode_bin_numpy
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_SAMPLE), reason="reference sample not present"
-)
+from tests.test_hypercube_golden import oracle_cube
 
 
-def test_cli_reference_format_end_to_end(tmp_path):
+def test_cli_reference_format_end_to_end(ref_sample, tmp_path):
     out = str(tmp_path / "cube.csv")
     rc = cli.main(
         [
-            "--data-dir", REF_SAMPLE,
+            "--data-dir", ref_sample,
             "--output", out,
             "--reference-format",
             "-l", "0",
@@ -33,15 +23,7 @@ def test_cli_reference_format_end_to_end(tmp_path):
     )
     assert rc == 0
 
-    con = duckdb.connect()
-    con.register("invoices", decode_bin_numpy(os.path.join(REF_SAMPLE, "invoices.bin")))
-    con.execute(
-        f"CREATE VIEW clients AS SELECT * FROM read_csv_auto('{REF_SAMPLE}/clients.csv')"
-    )
-    con.execute(
-        f"CREATE VIEW contracts AS SELECT * FROM read_csv_auto('{REF_SAMPLE}/contracts.csv')"
-    )
-    oracle = con.execute(ORACLE_SQL).df()
+    oracle = oracle_cube(ref_sample)
 
     with open(out) as fh:
         header = fh.readline().strip()

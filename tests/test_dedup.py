@@ -89,6 +89,50 @@ def test_exact_dedup_fingerprint_typed_injectivity(spark):
         ).collect()
     }
     assert g2 == {1: 1, 2: 2}
+    # nested nulls: Spark's hash skips null array elements and struct
+    # fields, so these keys must not merge with their null-free twins
+    # (nor nested MAP keys slip past the MAP guard)
+    nested = spark.createDataFrame(
+        [
+            (1, ["a", None], (None, "x")),
+            (2, ["a"], (None, "x")),
+            (3, [None], ("x", None)),
+            (4, [], ("x", None)),
+            (5, ["a", None], (None, "x")),
+            (6, [None, "a"], (None, "x")),
+        ],
+        "doc_id long, k array<string>, s struct<p:string,q:string>",
+    )
+    for key in (["k"], ["k", "s"], ["s"]):
+        fp = sorted(
+            (r.rep_id, r.n_dups)
+            for r in D.exact_dedup_groups(
+                nested, key, "doc_id", keep_keys=False
+            ).collect()
+        )
+        gb = sorted(
+            (r.rep_id, r.n_dups)
+            for r in D.exact_dedup_groups(
+                nested, key, "doc_id", keep_keys=True
+            ).select("rep_id", "n_dups").collect()
+        )
+        assert fp == gb, (key, fp, gb)
+    deep = spark.createDataFrame(
+        [(1, [[None], []]), (2, [[], [None]]), (3, [[None], []])],
+        "doc_id long, k array<array<string>>",
+    )
+    groups = sorted(
+        (r.rep_id, r.n_dups)
+        for r in D.exact_dedup_groups(
+            deep, ["k"], "doc_id", keep_keys=False
+        ).collect()
+    )
+    assert groups == [(1, 2), (2, 1)]
+    nested_map = spark.createDataFrame(
+        [(1, [{"a": 1}])], "doc_id long, k array<map<string,int>>"
+    )
+    with pytest.raises(ValueError, match="MAP-typed"):
+        D.exact_dedup_groups(nested_map, ["k"], "doc_id", keep_keys=False)
 
 
 def test_ngram_jaccard_finds_planted_pairs(docs):

@@ -117,8 +117,9 @@ def test_whole_stage_codegen_covers_aggregate(spark):
     # no line anchor (r14 advice: ':'-spined branch lines like
     # ':  +- HashAggregate' escaped the old '^\s*\+?-?' prefix) — match
     # every HashAggregate anywhere in the plan and require its codegen
-    # star
-    aggs = re.findall(r"(\*\(\d+\) )?HashAggregate", plan)
+    # star; the word boundary keeps ObjectHashAggregate (never
+    # codegen'd) out of the match
+    aggs = re.findall(r"(\*\(\d+\) )?\bHashAggregate", plan)
     assert aggs and all(aggs), plan
 
 
@@ -222,42 +223,38 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.set(k, v)
 
 
-def test_packed_cube_plan_shape(spark):
-    """The packed single-int64-key reference cube (the committed 1.46x
-    full-scale result, `operators/hypercube.py::_packed_reference_cube`)
-    must keep its plan: 2 broadcast map joins, no SMJ/Expand, exactly
-    one hash-partition exchange per aggregation level — each keyed on
-    the ONE packed long — and a single range exchange for the final
-    sort on that long. The sample invoices arrive single-partition
-    (exchanges would be elided), so repartition(4) models the at-scale
-    multi-partition input the exchange requirements come from."""
-    import os
+def test_reference_cube_plan_shape(spark, ref_sample):
+    """The exact reference cube keeps its three-level plan: 2 broadcast
+    map joins, no SMJ and no Expand (no COUNT DISTINCT anywhere), one
+    hash exchange per aggregation level — on (contract_id, time), then
+    (client_id, nature, time), then the five dims — and a single range
+    exchange for the final sort. The sample invoices may arrive as one
+    partition (exchanges would be elided), so repartition(4) models the
+    at-scale multi-partition input the exchange requirements come
+    from."""
     import re
 
     from implementation_of_an_etl_process_spark.operators import (
         reference_hypercube,
     )
-    from implementation_of_an_etl_process_spark.sources import (
-        read_clients,
-        read_contracts,
-        read_invoices_bin,
-    )
-    from tests.conftest import REF_SAMPLE
+    from tests.test_hypercube_golden import read_sample
 
-    clients = read_clients(spark, os.path.join(REF_SAMPLE, "clients.csv"))
-    contracts = read_contracts(spark, os.path.join(REF_SAMPLE, "contracts.csv"))
-    invoices = read_invoices_bin(
-        spark, os.path.join(REF_SAMPLE, "invoices.bin")
-    ).repartition(4)
-    plan = explain_str(reference_hypercube(clients, contracts, invoices, packed=True))
+    clients, contracts, invoices = read_sample(spark, ref_sample)
+    plan = explain_str(
+        reference_hypercube(clients, contracts, invoices.repartition(4))
+    )
     assert plan.count("BroadcastHashJoin Inner") == 2
     assert "SortMergeJoin" not in plan
     assert "Expand" not in plan
-    keys = re.findall(r"Arguments: hashpartitioning\((\w+)#\d+L?, \d+\)", plan)
-    assert keys == ["k1", "k2", "kf"], keys
-    for k in ("k1", "k2", "kf"):
-        # partial + final aggregate both hash a single long key
-        assert plan.count(f"Keys [1]: [{k}#") == 2, (k, plan)
+    keys = [
+        re.findall(r"(\w+)#\d+", args)
+        for args in re.findall(r"Arguments: hashpartitioning\((.*), \d+\)", plan)
+    ]
+    assert keys == [
+        ["contract_id", "time"],
+        ["client_id", "nature", "time"],
+        ["geo", "type", "misc", "nature", "time"],
+    ], keys
     assert plan.count("rangepartitioning") == 1
 
 

@@ -1141,3 +1141,17 @@ def test_int_cosine_pre_bit_identical_to_inline(spark):
         .collect()
     )
     assert sorted(map(tuple, base)) == sorted(map(tuple, pre))
+
+
+def test_flat_matrix_rejects_null_and_ragged_rows():
+    """The Arrow list -> matrix view must refuse null rows and rows of
+    unequal width even when the flattened size happens to divide the
+    row count (3 values over 3 rows would otherwise reshape to 3x1)."""
+    import numpy as np
+    import pyarrow as pa
+
+    ok = pa.array([[0, 1], [2, 3], [4, 5]]).slice(1)
+    assert S._flat_matrix(ok, np.float64).tolist() == [[2, 3], [4, 5]]
+    for bad in ([[1, 2], None, [3, 4], [5, 6]], [[1], [2, 3], []], []):
+        with pytest.raises(ValueError, match="null or ragged"):
+            S._flat_matrix(pa.array(bad, pa.list_(pa.int64())), np.int64)

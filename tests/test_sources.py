@@ -7,16 +7,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import REF_SAMPLE
 
-BIN = os.path.join(REF_SAMPLE, "invoices.bin")
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(BIN), reason="reference sample not present"
-)
+@pytest.fixture(scope="module")
+def bin_path(ref_sample):
+    return os.path.join(ref_sample, "invoices.bin")
 
 
-def test_invoice_datasource_matches_mapinpandas_reader(spark):
+def test_invoice_datasource_matches_mapinarrow_reader(spark, bin_path):
     from implementation_of_an_etl_process_spark.sources import read_invoices_bin
     from implementation_of_an_etl_process_spark.sources.invoice_datasource import (
         InvoiceBinaryDataSource,
@@ -24,17 +21,17 @@ def test_invoice_datasource_matches_mapinpandas_reader(spark):
 
     spark.dataSource.register(InvoiceBinaryDataSource)
     via_ds = (
-        spark.read.format("invoicebin").option("path", BIN).load()
+        spark.read.format("invoicebin").option("path", bin_path).load()
     )
-    via_mip = read_invoices_bin(spark, BIN)
-    assert via_ds.schema.fieldNames() == via_mip.schema.fieldNames()
-    assert via_ds.count() == via_mip.count() == 58176
+    via_arrow = read_invoices_bin(spark, bin_path)
+    assert via_ds.schema.fieldNames() == via_arrow.schema.fieldNames()
+    assert via_ds.count() == via_arrow.count() == os.path.getsize(bin_path) // 16
     a = via_ds.orderBy("id", "id_contract", "time", "consumption").toPandas()
-    b = via_mip.orderBy("id", "id_contract", "time", "consumption").toPandas()
+    b = via_arrow.orderBy("id", "id_contract", "time", "consumption").toPandas()
     assert a.equals(b)
 
 
-def test_invoice_datasource_split_partitioning(spark):
+def test_invoice_datasource_split_partitioning(spark, bin_path):
     from implementation_of_an_etl_process_spark.sources.invoice_datasource import (
         InvoiceBinaryDataSource,
     )
@@ -42,12 +39,13 @@ def test_invoice_datasource_split_partitioning(spark):
     spark.dataSource.register(InvoiceBinaryDataSource)
     df = (
         spark.read.format("invoicebin")
-        .option("path", BIN)
+        .option("path", bin_path)
         .option("split_bytes", 16 * 4096)
         .load()
     )
-    assert df.rdd.getNumPartitions() == 15  # 930816 B / 65536 B
-    assert df.count() == 58176
+    size = os.path.getsize(bin_path)
+    assert df.rdd.getNumPartitions() == -(-size // (16 * 4096))
+    assert df.count() == size // 16
 
 
 def test_write_reference_csv_format(spark, tmp_path):
@@ -102,7 +100,7 @@ def test_single_file_csv_stitch_preserves_global_sort(spark, tmp_path):
     assert len(keys) == 10_000
 
 
-def test_invoicebin_stream_exactly_once_across_restart(spark, tmp_path):
+def test_invoicebin_stream_exactly_once_across_restart(spark, bin_path, tmp_path):
     """Streaming face of the binary source: new files AND appended
     bytes advance the offset; a restarted query with the same
     checkpoint reads only the delta (exactly-once into a file sink)."""
@@ -111,7 +109,7 @@ def test_invoicebin_stream_exactly_once_across_restart(spark, tmp_path):
     )
 
     spark.dataSource.register(InvoiceBinaryDataSource)
-    raw = open(BIN, "rb").read()
+    raw = open(bin_path, "rb").read()
     n_rec = len(raw) // 16
     third = (n_rec // 3) * 16
     feed = tmp_path / "feed"
@@ -149,13 +147,13 @@ def test_invoicebin_stream_exactly_once_across_restart(spark, tmp_path):
     cols = ["id", "id_contract", "time", "consumption"]
     a = sink.orderBy(*cols).select(*cols).toPandas()
     b = (
-        spark.read.format("invoicebin").option("path", BIN).load()
+        spark.read.format("invoicebin").option("path", bin_path).load()
         .orderBy(*cols).select(*cols).toPandas()
     )
     assert a.equals(b)
 
 
-def test_invoicebin_writer_roundtrip(spark, tmp_path):
+def test_invoicebin_writer_roundtrip(spark, bin_path, tmp_path):
     """format('invoicebin') writer: the 16-byte-record encoder is the
     exact inverse of the reader — sample bin -> write -> re-read equals
     the original multiset, and every part file is record-aligned."""
@@ -164,7 +162,7 @@ def test_invoicebin_writer_roundtrip(spark, tmp_path):
     )
 
     spark.dataSource.register(InvoiceBinaryDataSource)
-    src = spark.read.format("invoicebin").option("path", BIN).load()
+    src = spark.read.format("invoicebin").option("path", bin_path).load()
     out = str(tmp_path / "rt")
     src.write.format("invoicebin").option("path", out).mode("overwrite").save()
     assert os.path.exists(os.path.join(out, "_SUCCESS"))
@@ -180,7 +178,7 @@ def test_invoicebin_writer_roundtrip(spark, tmp_path):
     assert a.equals(b)
 
 
-def test_invoicebin_overwrite_swaps_old_parts_at_commit(spark, tmp_path):
+def test_invoicebin_overwrite_swaps_old_parts_at_commit(spark, bin_path, tmp_path):
     """Overwrite must be two-phase like the part renames: a second
     overwrite replaces the first write's part files (no stale parts
     double-counted on re-read), and cleanup happens at commit — there
@@ -191,7 +189,7 @@ def test_invoicebin_overwrite_swaps_old_parts_at_commit(spark, tmp_path):
     )
 
     spark.dataSource.register(InvoiceBinaryDataSource)
-    src = spark.read.format("invoicebin").option("path", BIN).load()
+    src = spark.read.format("invoicebin").option("path", bin_path).load()
     out = str(tmp_path / "ow")
     half = src.limit(100)
     half.write.format("invoicebin").option("path", out).mode("overwrite").save()
@@ -203,7 +201,7 @@ def test_invoicebin_overwrite_swaps_old_parts_at_commit(spark, tmp_path):
     # double-count
     import shutil as _sh
 
-    _sh.copy(BIN, os.path.join(out, "invoices.bin"))
+    _sh.copy(bin_path, os.path.join(out, "invoices.bin"))
     src.write.format("invoicebin").option("path", out).mode("overwrite").save()
     n = (
         spark.read.format("invoicebin").option("path", f"{out}/*.bin").load()
@@ -213,7 +211,7 @@ def test_invoicebin_overwrite_swaps_old_parts_at_commit(spark, tmp_path):
     assert os.path.exists(marker)  # no blanket rmtree of the destination
 
 
-def test_invoicebin_writer_rejects_out_of_range_time(spark, tmp_path):
+def test_invoicebin_writer_rejects_out_of_range_time(spark, bin_path, tmp_path):
     """'time' is an int8 field on disk; values outside [-128, 127] must
     raise instead of silently truncating."""
     from implementation_of_an_etl_process_spark.sources.invoice_datasource import (
@@ -222,7 +220,7 @@ def test_invoicebin_writer_rejects_out_of_range_time(spark, tmp_path):
 
     spark.dataSource.register(InvoiceBinaryDataSource)
     bad = (
-        spark.read.format("invoicebin").option("path", BIN).load()
+        spark.read.format("invoicebin").option("path", bin_path).load()
         .limit(10)
         .withColumn("time", F.lit(1000))
         .select("id", "id_contract", "time", "amount", "consumption")

@@ -5,31 +5,19 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from implementation_of_an_etl_process_spark.operators import reference_hypercube
-from implementation_of_an_etl_process_spark.sources import (
-    read_clients,
-    read_contracts,
-    read_invoices_bin,
-)
 from implementation_of_an_etl_process_spark.streaming.hypercube import (
     hypercube_from_lvl1,
     incremental_hypercube_sink,
     streaming_hypercube_lvl1,
 )
-from tests.conftest import REF_SAMPLE
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_SAMPLE), reason="reference sample not present"
-)
+from tests.test_hypercube_golden import read_sample
 
 
-def test_incremental_hypercube_equals_batch(spark, tmp_path):
-    clients = read_clients(spark, os.path.join(REF_SAMPLE, "clients.csv"))
-    contracts = read_contracts(spark, os.path.join(REF_SAMPLE, "contracts.csv"))
-    invoices = read_invoices_bin(spark, os.path.join(REF_SAMPLE, "invoices.bin"))
+def test_incremental_hypercube_equals_batch(spark, ref_sample, tmp_path):
+    clients, contracts, invoices = read_sample(spark, ref_sample)
 
     # stage the fact stream as 3 parquet files (3 micro-batch arrivals)
     src = tmp_path / "invoice_stream"
@@ -63,13 +51,11 @@ def test_incremental_hypercube_equals_batch(spark, tmp_path):
     assert np.allclose(got["amount"], expected["amount"], atol=0.011)
 
 
-def test_empty_first_batch_does_not_poison_state(spark, tmp_path):
+def test_empty_first_batch_does_not_poison_state(spark, ref_sample, tmp_path):
     """A 0-row first micro-batch must be a no-op: a partitionBy write of
     zero rows would leave a _SUCCESS-only directory that breaks schema
     inference for every later read of the state."""
-    clients = read_clients(spark, os.path.join(REF_SAMPLE, "clients.csv"))
-    contracts = read_contracts(spark, os.path.join(REF_SAMPLE, "contracts.csv"))
-    invoices = read_invoices_bin(spark, os.path.join(REF_SAMPLE, "invoices.bin"))
+    clients, contracts, invoices = read_sample(spark, ref_sample)
 
     src = tmp_path / "src"
     state = str(tmp_path / "state")
@@ -94,7 +80,7 @@ def test_empty_first_batch_does_not_poison_state(spark, tmp_path):
     assert got.count() > 0
 
 
-def test_merge_replay_is_idempotent(spark, tmp_path):
+def test_merge_replay_is_idempotent(spark, ref_sample, tmp_path):
     """Checkpoint-replay safety of the partitioned state merge: after a
     crash BETWEEN partition writes, Structured Streaming re-runs
     foreachBatch with the same batch. Update-mode level-1 rows are
@@ -109,9 +95,7 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
         merge_lvl1_batch,
     )
 
-    clients = read_clients(spark, os.path.join(REF_SAMPLE, "clients.csv"))
-    contracts = read_contracts(spark, os.path.join(REF_SAMPLE, "contracts.csv"))
-    invoices = read_invoices_bin(spark, os.path.join(REF_SAMPLE, "invoices.bin"))
+    clients, contracts, invoices = read_sample(spark, ref_sample)
 
     src = tmp_path / "src"
     state = str(tmp_path / "state")
@@ -175,15 +159,13 @@ def _partition_snapshot(state_dir: str) -> dict[str, dict[str, tuple]]:
     return snap
 
 
-def test_incremental_state_rewrites_only_touched_partitions(spark, tmp_path):
+def test_incremental_state_rewrites_only_touched_partitions(spark, ref_sample, tmp_path):
     """The level-1 state is partitioned by geo and merged with dynamic
     partition overwrite: a micro-batch containing one geo's invoices
     must leave every OTHER geo partition's files untouched on disk
     (same names, sizes, mtimes) — the O(|state|)-per-batch full rewrite
     is the thing this design removed."""
-    clients = read_clients(spark, os.path.join(REF_SAMPLE, "clients.csv"))
-    contracts = read_contracts(spark, os.path.join(REF_SAMPLE, "contracts.csv"))
-    invoices = read_invoices_bin(spark, os.path.join(REF_SAMPLE, "invoices.bin"))
+    clients, contracts, invoices = read_sample(spark, ref_sample)
 
     # pick one geo; batch 2 will contain ONLY that geo's invoices
     one_geo = clients.select("geo").orderBy("geo").first()[0]

@@ -12,11 +12,11 @@ tuning axis, so the measurement transfers.
 
 ``spark.shuffle.compress`` is a core SparkConf setting (not
 runtime-settable), so the A/B interleaves at PROCESS level: each leg is
-a fresh JVM that runs the packed end-to-end cube (bin+csv -> cube ->
+a fresh JVM that runs the end-to-end cube (bin+csv -> cube ->
 single-file CSV) ``inner`` times and prints per-run wall times; the
 parent alternates legs ABAB and reports per-config minima plus output
 md5 equality. JVM startup is excluded (timed window starts after the
-session and inputs exist, same as fullscale_ab.py).
+session and inputs exist).
 
 Usage: python tools/fullscale_shufflecomp.py [data_dir] [outer] [inner]
 Defaults: /tmp/fullscale 2 2.
@@ -59,7 +59,7 @@ invoices = read_invoices_bin(
 times = []
 for i in range({inner}):
     t0 = time.monotonic()
-    cube = reference_hypercube(clients, contracts, invoices, packed=True)
+    cube = reference_hypercube(clients, contracts, invoices)
     write_csv(cube, {out!r}, single_file=True)
     times.append(time.monotonic() - t0)
 print("LEGRESULT " + json.dumps(times), flush=True)
