@@ -16,13 +16,11 @@ loops, no per-row Python):
                estimation techniques from rounding algorithms", 2002)
 - embedding cosine: quantized int cosine (see functions.vectors)
 
-Scale notes: the inverted-index join shuffles on the shingle — frequent
-shingles are the skew risk, so ``max_shingle_df`` drops shingles whose
-document frequency exceeds a cutoff (a shingle shared by thousands of
-docs contributes candidate pairs quadratically while carrying almost no
-discriminative signal). MinHash banding caps candidate generation at
-O(collisions), the 100 TB-safe path; exact Jaccard re-verifies, so
-precision is unaffected by banding.
+Scale notes: the n-gram inverted-index join shuffles on the shingle, so
+frequent shingles make it quadratic in their document frequency — it is
+the brute-force oracle, not the at-scale path. MinHash banding caps
+candidate generation at O(collisions), the 100 TB-safe path; exact
+Jaccard re-verifies, so precision is unaffected by banding.
 """
 
 from __future__ import annotations
@@ -150,57 +148,49 @@ def fingerprint_md5(df: DataFrame, text_col: str, *, normalize: bool = True) -> 
 # ---------------------------------------------------------------------------
 
 
-def _shingle_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    max_shingle_df: int | None,
-) -> DataFrame:
+def _shingle_table(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, shingle) pairs, distinct per document."""
-    sh = spread(df).select(
+    return spread(df).select(
         F.col(id_col).alias("_id"),
         F.explode(word_shingles(tokens(text_col), k)).alias("shingle"),
     )
-    if max_shingle_df is not None:
-        # Drop stop-shingles: quadratic candidate blowup, no signal.
-        keep = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(keep, "shingle", "left_semi")
-    return sh
 
 
-def _verify_pairs_exact(sh: DataFrame, cand: DataFrame | None, threshold: float) -> DataFrame:
-    """Exact Jaccard over a shingle table, optionally restricted to
-    candidate pairs. Jaccard = |A∩B| / (|A|+|B|-|A∩B|) — all-int inputs,
-    so the double division is engine-exact.
+def _candidate_shingles(
+    cand: DataFrame, docs: DataFrame, key: str, text_col: str, k: int
+) -> DataFrame:
+    """Persisted (_id, shingle) table of ONLY the documents the
+    (id_a, id_b) candidates name: a semi-join on the distinct candidate
+    ids, then a shingle pass over that subset — the candidate-scoped
+    verify input shared by the symmetric and incremental paths. The
+    caller materializes ``cand`` first and unpersists the result after
+    its verify action."""
+    from pyspark.storagelevel import StorageLevel
 
-    With candidates, intersections are computed by joining each pair to
-    its two shingle sets — cost O(|candidates| * doc_len), independent
-    of corpus size (the point of LSH). Without, the full inverted-index
-    self-join (the exact/brute path)."""
+    need = (
+        cand.select(F.col("id_a").alias(key))
+        .union(cand.select(F.col("id_b").alias(key)))
+        .distinct()
+    )
+    return _shingle_table(
+        docs.join(need, key, "left_semi"), key, text_col, k
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _verify_pairs_exact(sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of every pair sharing a shingle, by the full
+    inverted-index self-join (the exact/brute path). Jaccard =
+    |A∩B| / (|A|+|B|-|A∩B|) — all-int inputs, so the double division
+    is engine-exact."""
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_n"))
-    if cand is None:
-        a = sh.select(F.col("_id").alias("id_a"), "shingle")
-        b = sh.select(F.col("_id").alias("id_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("_inter"))
-        )
-    else:
-        a_sh = cand.join(
-            sh.select(F.col("_id").alias("id_a"), "shingle"), "id_a"
-        )
-        inter = a_sh.join(
-            sh.select(F.col("_id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        ).groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("_inter"))
+    a = sh.select(F.col("_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("_id").alias("id_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("_inter"))
+    )
     return (
         inter.join(sizes.withColumnRenamed("_n", "_na"), inter.id_a == sizes._id)
         .drop("_id")
@@ -240,8 +230,8 @@ def banding_sensitive_pairs(
     fails loudly instead of making the LSH entries intermittently
     flaky. Brute-force — test-scale use only.
     """
-    sh = _shingle_table(df, id_col, text_col, k, None)
-    return _verify_pairs_exact(sh, None, lo).filter(F.col("jaccard") < hi)
+    sh = _shingle_table(df, id_col, text_col, k)
+    return _verify_pairs_exact(sh, lo).filter(F.col("jaccard") < hi)
 
 
 def ngram_jaccard_pairs(
@@ -251,15 +241,13 @@ def ngram_jaccard_pairs(
     *,
     k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact near-dup pairs by word-k-gram Jaccard (inverted-index join).
 
     Exact but O(sum of squared shingle document-frequencies) — the
     baseline/oracle path. Use :func:`minhash_lsh_pairs` at scale.
     """
-    sh = _shingle_table(df, id_col, text_col, k, max_shingle_df)
-    return _verify_pairs_exact(sh, None, threshold)
+    return _verify_pairs_exact(_shingle_table(df, id_col, text_col, k), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -289,11 +277,22 @@ def minhash_signature(
     return sh.groupBy("_id").agg(*aggs)
 
 
-def _banded(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+def _banded(sig: DataFrame, bands: int, n_hashes: int) -> DataFrame:
     """Explode a signature frame into (_id, _n, band, bucket) rows —
     the single definition of the banding hash, shared by the symmetric
-    (:func:`minhash_lsh_pairs`) and asymmetric
-    (:func:`incremental_dedup`) paths so they can never diverge."""
+    (:func:`minhash_lsh_pairs`), asymmetric (:func:`incremental_dedup`)
+    and index paths so they can never diverge.
+
+    Each band hashes ``n_hashes // bands`` signature columns, so
+    ``bands`` must be >= 1 and divide ``n_hashes``: with fewer hashes
+    than bands a band would hash no columns and put every document in
+    one bucket (a quadratic candidate join), and a non-divisor would
+    silently drop the trailing hashes."""
+    if bands < 1 or n_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide n_hashes={n_hashes}"
+        )
+    rows = n_hashes // bands
     band_cols = F.array(
         *[
             F.struct(
@@ -367,7 +366,6 @@ def _dup_member_map(
     *,
     with_shingle_flag: int | None = None,
     materialize: str = "checkpoint",
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(_m, _mid, _rep[, _ghs]) rows for documents in MULTI-member
     byte-identical text groups only — the corpus-proportional state of
@@ -382,11 +380,11 @@ def _dup_member_map(
     ``materialize``: ``"checkpoint"`` runs an eager job now (callers
     that must pin the map before mutating shared state — the
     incremental/ingest paths); ``"persist"`` marks it MEMORY_AND_DISK
-    and lets the CALLER's first action fill the cache — no separate
+    and lets the caller's first action fill the cache — no separate
     job, the map computes inside the pipeline it guards (the symmetric
-    path's choice; ~0.6s of fixed job overhead saved at sf0.1);
-    ``"none"`` returns the bare lazy plan (the persistence-free caller
-    contract)."""
+    path's choice; ~0.6s of fixed job overhead saved at sf0.1). A
+    ``"persist"`` caller unpersists the map once its result is
+    pinned."""
     from pyspark.sql import Window
 
     members = _exact_copy_members(
@@ -411,16 +409,43 @@ def _dup_member_map(
         # is the group's flag
         dup = dup.withColumn("_ghs", F.col("_hs"))
     dup = dup.select(*cols)
-    if materialize == "none":
-        return dup
     if materialize == "persist":
         from pyspark.storagelevel import StorageLevel
 
-        dup = dup.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(dup)
-        return dup
+        return dup.persist(StorageLevel.MEMORY_AND_DISK)
     return dup.localCheckpoint(eager=True)
+
+
+def _expand_rep_pairs(out: DataFrame, dup_members: DataFrame) -> DataFrame:
+    """Expand representative pairs back to member pairs (left-join miss
+    = singleton = identity), and emit the intra-group (byte-identical,
+    jaccard exactly 1.0) pairs directly — both joins are against the
+    small dup-group map of :func:`_dup_member_map`."""
+    ea = dup_members.select(F.col("_rep").alias("id_a"), F.col("_mid").alias("_ma"))
+    eb = dup_members.select(F.col("_rep").alias("id_b"), F.col("_mid").alias("_mb"))
+    cross = (
+        out.join(ea, "id_a", "left")
+        .join(eb, "id_b", "left")
+        .select(
+            F.least(
+                F.coalesce(F.col("_ma"), F.col("id_a")),
+                F.coalesce(F.col("_mb"), F.col("id_b")),
+            ).alias("id_a"),
+            F.greatest(
+                F.coalesce(F.col("_ma"), F.col("id_a")),
+                F.coalesce(F.col("_mb"), F.col("id_b")),
+            ).alias("id_b"),
+            "jaccard",
+        )
+    )
+    intra = (
+        dup_members.filter(F.col("_ghs"))
+        .select("_m", F.col("_mid").alias("id_a"))
+        .join(dup_members.select("_m", F.col("_mid").alias("id_b")), "_m")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+    )
+    return cross.unionByName(intra)
 
 
 def minhash_lsh_pairs(
@@ -432,9 +457,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
-    persist_shingles: bool = True,
-    cache_registry: list[DataFrame] | None = None,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding, verified by exact Jaccard.
@@ -445,31 +467,33 @@ def minhash_lsh_pairs(
     re-verified exactly, so precision is exact and recall at realistic
     near-dup similarity indistinguishable from brute force; raise to
     64x16 (≈0.9998 at 0.8) or 128/32 when borderline-pair recall
-    matters more than the signature-width cost.
+    matters more than the signature-width cost. ``bands`` must divide
+    ``n_hashes`` (ValueError otherwise).
 
-    Verify-stage scoping (the 100 TB lever): candidates name only a
-    small fraction of the corpus (sum of banding collisions), so by
-    default the verify stage RE-SHINGLES just the candidate documents
-    (semi-join on the materialized candidate ids) instead of persisting
-    the full corpus-sized shingle table for the signature/verify
-    diamond — measured 546s -> 279s at 4M docs / 152M shingles, where
-    the full-table MEMORY_AND_DISK persist dominated the runtime.
-    The classic diamond (persist the full shingle table) remains for
-    (a) ``max_shingle_df`` (the stop-shingle df filter needs global
-    statistics the subset can't reproduce), (b) ``cache_registry``
-    callers, whose contract is a fully lazy plan: they receive the
-    persisted handle and unpersist after materializing the result,
-    (c) ``persist_shingles=False``, whose contract is a fully lazy,
-    persistence-free plan (the scoped path requires an eager candidate
-    materialization), and (d) LATENCY-gated inputs (leaf scans proven
-    < 64 MB): there the full shingle table is small by construction,
-    so the scoped path's extra machinery — an eager candidate
-    checkpoint job, a distinct-ids exchange, a semi-join, and a second
-    shingle pass — is pure fixed overhead (guide §1.2/§2.4; r15
-    measured jobs/run 17 -> 14, stages 25 -> 18, tasks 510 -> 390 and
-    wall 2.99 -> 1.88s at sf0.1 from this fold alone). At scale the
-    gate fails open and the scoped path keeps the corpus-sized table
-    unpersisted.
+    The result comes back pinned (``localCheckpoint``) and every cache
+    the call filled is released before it returns, so the session's
+    cache holds nothing the call created.
+
+    One size rule picks the plan: :func:`small_leaf_input` (leaf scans
+    proven under 64 MB; un-introspectable inputs fail open to the
+    at-scale side).
+
+    - Small input: the internal materializations run in latency mode
+      (AQE off, few shuffle partitions), and the full shingle table is
+      persisted once to feed both the signature and the verify stage
+      (the "diamond"). The table is small by construction, so the
+      scoped verify's extra machinery — an eager candidate checkpoint,
+      a distinct-ids exchange, a semi-join and a second shingle pass —
+      is pure fixed overhead: on the 5k-doc benchmark corpus (4-core
+      host) this path ran 2.20 s median against 2.78 s scoped with AQE
+      off and 3.70 s scoped with AQE on.
+    - Otherwise (the 100 TB lever): AQE stays on (skew splitting in the
+      banding join, runtime broadcast promotion), the corpus-sized
+      shingle table is never stored, and the verify stage re-shingles
+      only the documents the materialized candidates name
+      (:func:`_candidate_shingles`) — measured 546s -> 279s at 4M docs
+      / 152M shingles, where the full-table MEMORY_AND_DISK persist
+      dominated the runtime.
 
     Hot-bucket guard (``collapse_exact``, default on): a corpus with n
     byte-identical copies of one document puts all n in the same
@@ -488,165 +512,73 @@ def minhash_lsh_pairs(
     Semantics are therefore EXACTLY brute force; cost for the
     degenerate corpus drops from O(bands * n^2) candidate rows +
     shingle-verify to one md5 groupBy plus an equi-join whose output
-    is the (irreducible) pair list itself. Collapse is skipped when
-    ``max_shingle_df`` is set (global shingle document frequencies
-    must be counted over the full corpus, not representatives).
+    is the (irreducible) pair list itself.
     """
+    from pyspark.storagelevel import StorageLevel
+
     from implementation_of_an_etl_process_spark.plans import (
         latency_mode,
         small_leaf_input,
     )
 
-    rows = n_hashes // bands
-    collapse = collapse_exact and max_shingle_df is None and threshold <= 1.0
-    # Latency mode (small PROVEN input + the eager-materialization
-    # contract): the guard's extra joins cost ~8 AQE shuffle-stage
-    # sub-jobs of pure scheduling at toy scale (measured 27 vs 12 jobs,
-    # 3.1s vs 1.9s at sf0.1) — run the internal materializations with
-    # AQE off and pin the EXPANDED result before returning. Fails open:
-    # big or un-introspectable inputs keep AQE (skew splitting in the
-    # banding join, runtime broadcast promotion).
-    latency = (
-        persist_shingles
-        and cache_registry is None
-        and small_leaf_input(df)
-    )
-    dup_members = None
-    if collapse:
-        # persist (not eager checkpoint): the map's cache fills inside
-        # the candidate job's anti-join — the guard costs a subplan of
-        # the pipeline, not a separate up-front job. Cached because the
-        # pair expansion reads it 3x after `out` is pinned; the
-        # persistence-free caller contract (persist_shingles=False)
-        # gets the bare lazy plan and accepts the recomputes.
-        dup_members = _dup_member_map(
-            df,
-            id_col,
-            text_col,
-            with_shingle_flag=k,
-            materialize="none" if not persist_shingles else "persist",
-            cache_registry=cache_registry,
-        )
-        # drop the NON-representative duplicate docs; everything else
-        # (singletons + one rep per dup group) flows through unchanged
-        non_reps = dup_members.filter(F.col("_mid") != F.col("_rep")).select(
-            F.col("_mid").alias(id_col)
-        )
-        df = df.join(non_reps, id_col, "left_anti")
-    with latency_mode(df.sparkSession, latency):
-        classic_diamond = (
-            max_shingle_df is not None
-            or cache_registry is not None
-            or not persist_shingles
-            # latency-gated (provably small) input: the full shingle
-            # table is bounded, so the diamond persist is safe and the
-            # scoped path's candidate checkpoint + distinct + semi-join
-            # + re-shingle are pure stage overhead (see docstring (d))
-            or latency
-        )
-        sh = _shingle_table(df, id_col, text_col, k, max_shingle_df)
-        if classic_diamond and persist_shingles:
-            # the shingle table feeds BOTH the signature and the verify
-            # stage (diamond plan) — persist so it's computed once; spills
-            # to disk under pressure, LRU-evicted when unused
-            from pyspark.storagelevel import StorageLevel
-
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            if cache_registry is not None:
-                cache_registry.append(sh)
-        # one aggregate produces the signature AND the doc shingle-set size:
-        # the size rides along through banding into the verify arithmetic,
-        # replacing two joins against a separately-aggregated sizes table
-        # (measured ~2s of stage overhead at sf0.1, and at scale it removes
-        # one full pass over the shingle table)
-        sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
-        banded = _banded(sig, bands, rows)
-        left = banded.select(
-            F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
-        )
-        right = banded.select(
-            F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "band", "bucket"
-        )
-        cand = (
-            left.join(right, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "_na", "_nb")
-            .distinct()
-        )
-        if not classic_diamond:
-            # Materialize the (small) candidate set once, then re-shingle
-            # ONLY the documents it names — the corpus-sized shingle table
-            # is never stored. localCheckpoint output is auto-cleaned when
-            # the frame is GC'd.
-            cand = cand.localCheckpoint(eager=True)
-            need = (
-                cand.select(F.col("id_a").alias(id_col))
-                .union(cand.select(F.col("id_b").alias(id_col)))
+    small = small_leaf_input(df)
+    collapse = collapse_exact and threshold <= 1.0
+    dup_members = verify_sh = None
+    try:
+        if collapse:
+            # persist (not eager checkpoint): the map's cache fills inside
+            # the candidate job's anti-join — the guard costs a subplan of
+            # the pipeline, not a separate up-front job. Cached because the
+            # pair expansion reads it 3x.
+            dup_members = _dup_member_map(
+                df, id_col, text_col, with_shingle_flag=k, materialize="persist"
+            )
+            # drop the NON-representative duplicate docs; everything else
+            # (singletons + one rep per dup group) flows through unchanged
+            non_reps = dup_members.filter(F.col("_mid") != F.col("_rep")).select(
+                F.col("_mid").alias(id_col)
+            )
+            df = df.join(non_reps, id_col, "left_anti")
+        with latency_mode(df.sparkSession, small):
+            sh = _shingle_table(df, id_col, text_col, k)
+            if small:
+                # the diamond: one table feeds the signature AND the verify
+                # stage — persisted so it's computed once
+                sh = verify_sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+            # one aggregate produces the signature AND the doc shingle-set
+            # size: the size rides along through banding into the verify
+            # arithmetic, replacing two joins against a separately-aggregated
+            # sizes table (measured ~2s of stage overhead at sf0.1, and at
+            # scale it removes one full pass over the shingle table)
+            sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
+            banded = _banded(sig, bands, n_hashes)
+            left = banded.select(
+                F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
+            )
+            right = banded.select(
+                F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "band", "bucket"
+            )
+            cand = (
+                left.join(right, ["band", "bucket"])
+                .filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b", "_na", "_nb")
                 .distinct()
             )
-            verify_sh = _shingle_table(
-                df.join(need, id_col, "left_semi"), id_col, text_col, k, None
-            )
-            from pyspark.storagelevel import StorageLevel
-
-            verify_sh = verify_sh.persist(StorageLevel.MEMORY_AND_DISK)
-        else:
-            verify_sh = sh
-        out = _jaccard_from_candidates(cand, verify_sh, threshold)
-        if persist_shingles and cache_registry is None:
-            if not (latency and collapse):
-                out = out.localCheckpoint(eager=True)
-                verify_sh.unpersist()
-            # latency+collapse: the post-expansion checkpoint below
-            # subsumes this one — don't materialize the pair table twice
-        if collapse:
-            # expand representative pairs back to member pairs (left-join
-            # miss = singleton = identity), and emit the intra-group
-            # (byte-identical, jaccard exactly 1.0) pairs directly — both
-            # joins are against the small dup-group map
-            ea = dup_members.select(
-                F.col("_rep").alias("id_a"), F.col("_mid").alias("_ma")
-            )
-            eb = dup_members.select(
-                F.col("_rep").alias("id_b"), F.col("_mid").alias("_mb")
-            )
-            cross = (
-                out.join(ea, "id_a", "left")
-                .join(eb, "id_b", "left")
-                .select(
-                    F.least(
-                        F.coalesce(F.col("_ma"), F.col("id_a")),
-                        F.coalesce(F.col("_mb"), F.col("id_b")),
-                    ).alias("id_a"),
-                    F.greatest(
-                        F.coalesce(F.col("_ma"), F.col("id_a")),
-                        F.coalesce(F.col("_mb"), F.col("id_b")),
-                    ).alias("id_b"),
-                    "jaccard",
-                )
-            )
-            intra = (
-                dup_members.filter(F.col("_ghs"))
-                .select("_m", F.col("_mid").alias("id_a"))
-                .join(dup_members.select("_m", F.col("_mid").alias("id_b")), "_m")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-            )
-            out = cross.unionByName(intra)
-        if latency and collapse:
-            if persist_shingles and cache_registry is None:
-                _vsh_release = verify_sh
-            else:
-                _vsh_release = None
-            # pin the expanded pair list while AQE is still off (the
-            # expansion joins are exactly the sub-job-heavy part —
-            # latency_mode's contract: materialize INSIDE the block)
-            # and release the guard map — bounded-cache hygiene
-            out = out.localCheckpoint(eager=True)
-            if _vsh_release is not None:
-                _vsh_release.unpersist()
-            dup_members.unpersist()
-    return out
+            if not small:
+                # materialize the (small) candidate set once; the verify
+                # stage then shingles only the documents it names
+                cand = cand.localCheckpoint(eager=True)
+                verify_sh = _candidate_shingles(cand, df, id_col, text_col, k)
+            out = _jaccard_from_candidates(cand, verify_sh, threshold)
+            if collapse:
+                out = _expand_rep_pairs(out, dup_members)
+            # pin inside the block (latency_mode's contract) and before the
+            # caches the plan reads are released below
+            return out.localCheckpoint(eager=True)
+    finally:
+        for cached in (verify_sh, dup_members):
+            if cached is not None:
+                cached.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -1173,16 +1105,7 @@ def _scoped_near_ids(
     matched documents, exact-Jaccard them, and return the distinct
     new-side original ids that pass — shared by both incremental
     paths so the verify semantics cannot diverge."""
-    from pyspark.storagelevel import StorageLevel
-
-    need = (
-        cand.select(F.col("id_a").alias("_k"))
-        .union(cand.select(F.col("id_b").alias("_k")))
-        .distinct()
-    )
-    verify_sh = _shingle_table(
-        keyed_union.join(need, "_k", "left_semi"), "_k", text_col, k, None
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    verify_sh = _candidate_shingles(cand, keyed_union, "_k", text_col, k)
     near = (
         _jaccard_from_candidates(cand, verify_sh, threshold)
         .select(F.col("id_a._oid").alias("_id"))
@@ -1292,7 +1215,6 @@ def incremental_dedup(
     batch x history only, so n identical history docs cost O(n)
     candidate rows per colliding batch representative, not O(n^2).
     """
-    rows = n_hashes // bands
     dup_members = None
     if collapse_exact:
         new, dup_members = _collapse_new_side(new, id_col, text_col)
@@ -1302,9 +1224,9 @@ def incremental_dedup(
     keyed = _ns_keyed(hist, 0, id_col, text_col).unionByName(
         _ns_keyed(new, 1, id_col, text_col)
     )
-    sh = _shingle_table(keyed, "_k", text_col, k, None)
+    sh = _shingle_table(keyed, "_k", text_col, k)
     banded = _banded(
-        minhash_signature(sh, n_hashes=n_hashes, include_size=True), bands, rows
+        minhash_signature(sh, n_hashes=n_hashes, include_size=True), bands, n_hashes
     )
     left = banded.filter(F.col("_id._ns") == 1).select(
         F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
@@ -1377,10 +1299,9 @@ def write_dedup_index(
     import json
     import os
 
-    rows = n_hashes // bands
-    sh = _shingle_table(docs, id_col, text_col, k, None)
+    sh = _shingle_table(docs, id_col, text_col, k)
     sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
-    banded = _banded(sig, bands, rows)
+    banded = _banded(sig, bands, n_hashes)
     meta = {
         "v": 2,  # v2: md5 relation is ID-KEYED (enables MoR deletes)
         "k": k,
@@ -1683,7 +1604,6 @@ def incremental_dedup_indexed(
     _check_no_pending_append(index_path)
     meta = _load_meta(index_path)
     k, n_hashes, bands = meta["k"], meta["n_hashes"], meta["bands"]
-    rows = n_hashes // bands
     dup_members = None
     if collapse_exact:
         # hot-bucket guard: classify one representative per distinct
@@ -1696,11 +1616,11 @@ def incremental_dedup_indexed(
     # (same discipline as the inline path) so an id value present in
     # both corpora never merges shingle sets in the verify stage
     keyed_new = _ns_keyed(new, 1, id_col, text_col)
-    sh_new = _shingle_table(keyed_new, "_k", text_col, k, None)
+    sh_new = _shingle_table(keyed_new, "_k", text_col, k)
     banded_new = _banded(
         minhash_signature(sh_new, n_hashes=n_hashes, include_size=True),
         bands,
-        rows,
+        n_hashes,
     )
     stored = _index_bands(spark, index_path, meta)
     left = banded_new.select(
@@ -1786,7 +1706,6 @@ def ingest_batch(
             f"{meta['id_col']!r}, got {id_col!r}"
         )
     k, n_hashes, bands = meta["k"], meta["n_hashes"], meta["bands"]
-    rows = n_hashes // bands
     # hot-bucket guard (see incremental_dedup): classify one
     # representative per distinct batch text, expand verdicts after
     new, dup_members = _collapse_new_side(new, id_col, text_col)
@@ -1799,11 +1718,11 @@ def ingest_batch(
         .localCheckpoint(eager=True)
     )
     keyed_new = _ns_keyed(new, 1, id_col, text_col)
-    sh_new = _shingle_table(keyed_new, "_k", text_col, k, None)
+    sh_new = _shingle_table(keyed_new, "_k", text_col, k)
     banded_new = _banded(
         minhash_signature(sh_new, n_hashes=n_hashes, include_size=True),
         bands,
-        rows,
+        n_hashes,
     ).localCheckpoint(eager=True)
     # --- probe (same joins as incremental_dedup_indexed) --------------
     hist_md5 = _index_md5(spark, index_path, meta)

@@ -180,18 +180,15 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
 #: promotion, partition coalescing) is worth far more than the fixed
 #: scheduling cost, so the gate fails OPEN: un-introspectable plans
 #: and anything past the limit keep AQE.
-LATENCY_MODE_LIMIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LATENCY_LIMIT", str(64 << 20))
-)
+LATENCY_MODE_LIMIT_BYTES = 64 << 20
 
 
-def small_leaf_input(df: DataFrame, limit_bytes: int | None = None) -> bool:
+def small_leaf_input(df: DataFrame) -> bool:
     """True iff the plan's leaf relations are provably under the
     latency-mode ceiling (False on estimation failure — fail open to
     the AQE path)."""
-    limit = LATENCY_MODE_LIMIT_BYTES if limit_bytes is None else limit_bytes
     try:
-        return leaf_scan_bytes(df) <= limit
+        return leaf_scan_bytes(df) <= LATENCY_MODE_LIMIT_BYTES
     except Exception:
         return False
 
@@ -202,12 +199,10 @@ def small_leaf_input(df: DataFrame, limit_bytes: int | None = None) -> bool:
 #: task-scheduling overhead with AQE coalescing off — profiled: the
 #: minhash latency pipeline ran 26 stages × 32 tasks = 775 tasks/query
 #: at sf0.1 with every task sub-5ms. 8 keeps multi-core parallelism for
-#: the block's real work while cutting the task count 4x. Env-tunable;
-#: at cluster scale latency mode never engages (the gate fails open),
-#: so this constant cannot leak into big-data plans.
-LATENCY_MODE_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_LATENCY_SHUFFLE", "8")
-)
+#: the block's real work while cutting the task count 4x. At cluster
+#: scale latency mode never engages (the gate fails open), so this
+#: constant cannot leak into big-data plans.
+LATENCY_MODE_SHUFFLE_PARTITIONS = 8
 
 
 class latency_mode:

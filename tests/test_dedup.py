@@ -19,11 +19,37 @@ OTHER = (
 )
 
 
+DOC_ROWS = [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)]
+FARM_ROWS = [(i, BASE) for i in range(20)] + [(100, NEAR), (101, OTHER)]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.createDataFrame(
-        [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)], ["doc_id", "text"]
-    )
+    return spark.createDataFrame(DOC_ROWS, ["doc_id", "text"])
+
+
+@pytest.fixture(params=["local", "parquet"])
+def gated_docs(request, spark, tmp_path):
+    """Builds (doc_id, text) rows on one side of minhash_lsh_pairs' size
+    gate: a local frame (unknown leaf size, so the at-scale scoped
+    verify) or a parquet scan (provably small, so the latency-mode
+    diamond)."""
+    from implementation_of_an_etl_process_spark.plans import small_leaf_input
+
+    def build(rows):
+        df = spark.createDataFrame(rows, ["doc_id", "text"])
+        if request.param == "parquet":
+            df.write.parquet(str(tmp_path / "docs"))
+            df = spark.read.parquet(str(tmp_path / "docs"))
+        # a gate change must not silently move both cases onto one side
+        assert small_leaf_input(df) == (request.param == "parquet")
+        return df
+
+    return build
+
+
+def _pairs(df):
+    return {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
 
 
 def test_exact_dedup_keeps_min_id(docs):
@@ -159,21 +185,35 @@ def test_minhash_lsh_finds_planted_pairs(docs):
     assert (1, 4) not in pairs
 
 
-def test_minhash_jaccard_values_match_exact(docs):
-    """LSH-then-verify must report the same jaccard as brute force."""
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.5
-        ).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=3, threshold=0.5
-        ).collect()
-    }
+def test_minhash_jaccard_values_match_exact(gated_docs):
+    """LSH-then-verify must report the same jaccard as brute force, on
+    both sides of the size gate."""
+    docs = gated_docs(DOC_ROWS)
+    exact = _pairs(D.ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.5))
+    lsh = _pairs(D.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.5))
     assert lsh == exact
+
+
+@pytest.mark.parametrize("n_hashes, bands", [(4, 8), (30, 8), (32, 0)])
+def test_minhash_rejects_unbandable_signature(docs, n_hashes, bands):
+    """Fewer hashes than bands would band on no columns (every document
+    in one bucket: a quadratic candidate join); a non-divisor would
+    silently drop hashes."""
+    with pytest.raises(ValueError, match="divide n_hashes"):
+        D.minhash_lsh_pairs(docs, "doc_id", "text", n_hashes=n_hashes, bands=bands)
+
+
+def test_minhash_releases_its_caches(spark, gated_docs):
+    """Every cache the call fills (dup-group map, verify shingles) is
+    released once its result is pinned, on both sides of the gate."""
+    docs = gated_docs(FARM_ROWS)
+
+    def n_cached():
+        return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+    before = n_cached()
+    D.minhash_lsh_pairs(docs, "doc_id", "text", k=3, threshold=0.5).collect()
+    assert n_cached() == before
 
 
 def test_simhash_identical_and_near(docs):
@@ -270,25 +310,15 @@ def test_hot_bucket_identical_corpus_completes(spark):
     assert len(probe) == 1 and probe[0].jaccard == 1.0
 
 
-def test_hot_bucket_collapse_matches_uncollapsed(spark):
+def test_hot_bucket_collapse_matches_uncollapsed(gated_docs):
     """Mixed corpus (copy farm + near pair + unrelated): the guard must
-    be a pure plan change — identical pairs and jaccard values."""
-    rows = [(i, BASE) for i in range(20)] + [(100, NEAR), (101, OTHER)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    be a pure plan change — identical pairs and jaccard values, equal to
+    brute force, on both sides of the size gate."""
+    docs = gated_docs(FARM_ROWS)
     kw = dict(k=3, threshold=0.5)
-    on = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_pairs(
-            docs, "doc_id", "text", collapse_exact=True, **kw
-        ).collect()
-    }
-    off = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_pairs(
-            docs, "doc_id", "text", collapse_exact=False, **kw
-        ).collect()
-    }
-    assert on == off
+    on = _pairs(D.minhash_lsh_pairs(docs, "doc_id", "text", collapse_exact=True, **kw))
+    off = _pairs(D.minhash_lsh_pairs(docs, "doc_id", "text", collapse_exact=False, **kw))
+    assert on == off == _pairs(D.ngram_jaccard_pairs(docs, "doc_id", "text", **kw))
     assert on[(0, 19)] == 1.0  # intra-farm pair
     assert 0.5 < on[(0, 100)] < 1.0  # farm member x near mutation
 
