@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A driver runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row count, schema and
+order-insensitive values); ``tools/verify_local.py`` does the same
+locally.
 
 The actual battery lives in
 ``implementation_of_an_etl_process_spark.queries``; this module is the
@@ -37,6 +38,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted only for
-    genuinely non-SQL-expressible ops → driver does rows-only check)."""
+    """DuckDB-runnable ANSI SQL oracle per query; every entry has one."""
     return _battery.oracle_sql()

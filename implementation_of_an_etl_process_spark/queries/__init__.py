@@ -3,7 +3,8 @@
 ANSI-SQL oracle string DuckDB can run on the same parquet tables.
 
 This is the driver-contract surface (``__spark_entry__.py`` re-exports
-it) and the living inventory of SURVEY.md §2 coverage.
+it) and the living inventory of SURVEY.md §2 coverage. ``queries()`` and
+``oracle_sql()`` iterate in ``_MODULES`` registration order.
 """
 
 from __future__ import annotations
@@ -12,134 +13,47 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from implementation_of_an_etl_process_spark.queries import relational, relational2
-
-_MODULES = [relational, relational2]
-
-try:  # registered as they land
-    from implementation_of_an_etl_process_spark.queries import textops
-
-    _MODULES.append(textops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import similarity
-
-    _MODULES.append(similarity)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import streamingops
-
-    _MODULES.append(streamingops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import temporal
-
-    _MODULES.append(temporal)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import udfs
-
-    _MODULES.append(udfs)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import refnative
-
-    _MODULES.append(refnative)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import pipelineops
-
-    _MODULES.append(pipelineops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import formats
-
-    _MODULES.append(formats)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import functions2
-
-    _MODULES.append(functions2)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import tpch
-
-    _MODULES.append(tpch)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import pretrain
-
-    _MODULES.append(pretrain)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import etlops
-
-    _MODULES.append(etlops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import graphops
-
-    _MODULES.append(graphops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import qualityops
-
-    _MODULES.append(qualityops)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import sql41
-
-    _MODULES.append(sql41)
-except ImportError:  # pragma: no cover
-    pass
-try:
-    from implementation_of_an_etl_process_spark.queries import tfidfops
-
-    _MODULES.append(tfidfops)
-except ImportError:  # pragma: no cover
-    pass
-
-
-# The driver's CORRECTNESS gate checks only the FIRST 50 entries of
-# ``queries()`` iteration order (observed: CORRECTNESS_r01-r03 are each
-# exactly 50 rows, in registration order).  Since round 11 the gate
-# prefix is COMPUTED, not hand-curated: ``rotation.compute_rotation``
-# derives it from the CORRECTNESS_r*/VERIFY_LOCAL_r* artifacts —
-# flagships every round, rule-(a) never-gated debt, rule-(b) staleness
-# queue (latest green may lag at most 3 rounds), per-family fresh
-# evidence, then oldest-evidence fill.  The hand-maintained literal
-# this replaces drifted the moment a new artifact landed (two red
-# meta-tests in round 10); a computed queue is the only thing that
-# stays green as cohorts age (at r11 the 41 r7-green entries are
-# mandatory; at r12 the 47-strong r8 cohort starts aging in).
-from implementation_of_an_etl_process_spark.queries.rotation import (
-    compute_rotation,
+from implementation_of_an_etl_process_spark.queries import (
+    relational,
+    relational2,
+    textops,
+    similarity,
+    streamingops,
+    temporal,
+    udfs,
+    refnative,
+    pipelineops,
+    formats,
+    functions2,
+    tpch,
+    pretrain,
+    etlops,
+    graphops,
+    qualityops,
+    sql41,
+    tfidfops,
 )
 
-_DRIVER_PRIORITY = compute_rotation(
-    [k for m in _MODULES for k in m.QUERIES]
-)
-
-def _prioritize(entries: dict) -> dict:
-    """Stable reorder: curated driver-priority names first (those that
-    exist), then everything else in module registration order."""
-    ordered = {k: entries[k] for k in _DRIVER_PRIORITY if k in entries}
-    ordered.update((k, v) for k, v in entries.items() if k not in ordered)
-    return ordered
+_MODULES = [
+    relational,
+    relational2,
+    textops,
+    similarity,
+    streamingops,
+    temporal,
+    udfs,
+    refnative,
+    pipelineops,
+    formats,
+    functions2,
+    tpch,
+    pretrain,
+    etlops,
+    graphops,
+    qualityops,
+    sql41,
+    tfidfops,
+]
 
 
 def _with_engine_confs(
@@ -165,11 +79,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _MODULES:
         out.update({k: _with_engine_confs(v) for k, v in m.QUERIES.items()})
-    return _prioritize(out)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for m in _MODULES:
-        out.update(m.ORACLES)
-    return _prioritize(out)
+    return {k: m.ORACLES[k] for m in _MODULES for k in m.QUERIES if k in m.ORACLES}

@@ -178,13 +178,13 @@ ORDER BY source
 
 
 def bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-located (bucketed) join under the driver gate: both sides are
-    bucketed on the join key at WRITE time, so the join itself runs
-    with NO Exchange — the entry asserts that on its own plan (exactly
-    one Exchange total, belonging to the final status aggregate) and
-    fails loudly if bucketing ever stops eliminating the join shuffle.
-    At 100 TB this is the difference between re-shuffling the fact
-    table on every join and shuffling it once at ingest."""
+    """Co-located (bucketed) join: both sides are bucketed on the join
+    key at WRITE time, so the join itself runs with NO Exchange — the
+    entry asserts that on its own plan (exactly one hash Exchange,
+    belonging to the final status aggregate) and fails loudly if
+    bucketing ever stops eliminating the join shuffle. At 100 TB this
+    is the difference between re-shuffling the fact table on every
+    join and shuffling it once at ingest."""
     from implementation_of_an_etl_process_spark.plans import explain_str
     from implementation_of_an_etl_process_spark.sources.sinks import (
         write_bucketed_table,
@@ -227,29 +227,25 @@ def bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_buckets=8,
             sort_cols=["o_orderkey"],
         )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = (
-            spark.table(bl)
-            .join(spark.table(bo), "o_orderkey")
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum("cents").alias("revenue_cents"),
-            )
-            .orderBy("o_orderstatus")
+    # the merge hint keeps both bucketed sides un-broadcast without
+    # touching the caller's autoBroadcastJoinThreshold
+    out = (
+        spark.table(bl)
+        .join(spark.table(bo).hint("merge"), "o_orderkey")
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum("cents").alias("revenue_cents"),
         )
-        plan = explain_str(out)
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        if n_exchanges > 1:
-            raise RuntimeError(
-                f"bucketed join regressed: {n_exchanges} exchanges in\n{plan}"
-            )
-        # materialize under the no-broadcast conf, then restore
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        .orderBy("o_orderstatus")
+    )
+    plan = explain_str(out)
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    if n_exchanges > 1:
+        raise RuntimeError(
+            f"bucketed join regressed: {n_exchanges} exchanges in\n{plan}"
+        )
+    return out
 
 
 BUCKETED_JOIN_SQL = """

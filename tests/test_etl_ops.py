@@ -9,6 +9,7 @@ from implementation_of_an_etl_process_spark.operators.etl import (
     merge_upsert,
     scd2_history,
 )
+from tests.conftest import SF_ORACLE
 
 
 def _base(spark):
@@ -108,3 +109,25 @@ def test_partitioned_read_prunes(spark, tmp_path):
         .toString()
     )
     assert "PartitionFilters: [isnotnull(lang" in plan
+
+
+def test_bucketed_join_leaves_session_conf_alone(spark, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+
+    from implementation_of_an_etl_process_spark.queries.etlops import (
+        bucketed_join_orders,
+    )
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    df = bucketed_join_orders(spark, SF_ORACLE)
+    assert df.collect()
+    assert "spark.sql.autoBroadcastJoinThreshold" not in calls, calls
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan, plan
