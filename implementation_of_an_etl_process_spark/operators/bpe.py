@@ -244,11 +244,19 @@ def train_bpe(
     # Every LOOP job is vocab-sized; when the vocab is provably modest,
     # AQE's per-shuffle-stage sub-job scheduling is pure overhead in a
     # many-round driver loop (measured 239.0s -> 209.1s for 500 merges
-    # at 50k vocab; the same finding as the minhash guard's latency
-    # mode, plans/shape.py). Fails open: big vocabs keep AQE.
-    from implementation_of_an_etl_process_spark.plans import latency_mode
+    # at 50k vocab; the same finding as the minhash small path,
+    # plans/shape.py). The loop then runs on a private clone of the
+    # session with AQE off, leaving the caller's settings alone. Fails
+    # open: big vocabs keep AQE.
+    from implementation_of_an_etl_process_spark.session import (
+        latency_session,
+        rebind,
+    )
 
-    n_vocab = wt.count()
+    if wt.count() <= 2_000_000:
+        scope = latency_session(docs.sparkSession)
+        if scope is not None:
+            wt = rebind(wt, scope)
     # The known symbol universe (initial alphabet; _train_loop adds
     # each merge product) — _select_batch needs it to detect concat
     # collisions, where a merge's product equals an existing symbol
@@ -260,11 +268,10 @@ def train_bpe(
         .distinct()
         .collect()
     }
-    with latency_mode(docs.sparkSession, n_vocab <= 2_000_000):
-        return _train_loop(
-            wt, n_merges, min_pair_count, checkpoint_every,
-            batch_merges, apply_mode, symbols,
-        )
+    return _train_loop(
+        wt, n_merges, min_pair_count, checkpoint_every,
+        batch_merges, apply_mode, symbols,
+    )
 
 
 def _train_loop(

@@ -268,13 +268,13 @@ def minhash_signature(
     SAME aggregate — callers that need sizes downstream (the LSH verify
     stage) get them without a second pass over the shingle table.
     """
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
+    # SQL strings, not Column calls: the same expressions for 3 py4j
+    # round trips each instead of about 12 per Column call (PySpark 4
+    # records every Column call's call site in the JVM)
+    aggs = [f"min(xxhash64({i}, shingle)) AS h{i}" for i in range(n_hashes)]
     if include_size:
-        aggs.append(F.count(F.lit(1)).alias("_n"))
-    return sh.groupBy("_id").agg(*aggs)
+        aggs.append("count(1) AS _n")
+    return sh.groupBy("_id").agg(*map(F.expr, aggs))
 
 
 def _banded(sig: DataFrame, bands: int, n_hashes: int) -> DataFrame:
@@ -293,23 +293,13 @@ def _banded(sig: DataFrame, bands: int, n_hashes: int) -> DataFrame:
             f"bands={bands} must be >= 1 and divide n_hashes={n_hashes}"
         )
     rows = n_hashes // bands
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                    "bucket"
-                ),
-            )
-            for b in range(bands)
-        ]
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', hash("
+        + ", ".join(f"h{b * rows + r}" for r in range(rows))
+        + "))"
+        for b in range(bands)
     )
-    return sig.select("_id", "_n", F.explode(band_cols).alias("bb")).select(
-        "_id",
-        "_n",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
+    return sig.selectExpr("_id", "_n", f"inline(array({structs}))")
 
 
 def _jaccard_from_candidates(
@@ -317,24 +307,19 @@ def _jaccard_from_candidates(
 ) -> DataFrame:
     """Exact-Jaccard verify over (id_a, id_b, _na, _nb) candidates and a
     (_id, shingle) table (sizes already ride on the candidate row)."""
-    a_sh = cand.join(sh.select(F.col("_id").alias("id_a"), "shingle"), "id_a")
+    a_sh = cand.join(sh.selectExpr("_id AS id_a", "shingle"), "id_a")
     inter = (
-        a_sh.join(
-            sh.select(F.col("_id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
+        a_sh.join(sh.selectExpr("_id AS id_b", "shingle"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b", "_na", "_nb")
-        .agg(F.count(F.lit(1)).alias("_inter"))
+        .agg(F.expr("count(1) AS _inter"))
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("_inter").cast("double")
-            / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    # the threshold goes in as a Column literal: a SQL "0.8" would parse
+    # as a decimal, not as the caller's double
+    return inter.selectExpr(
+        "id_a",
+        "id_b",
+        "CAST(_inter AS DOUBLE) / CAST(_na + _nb - _inter AS DOUBLE) AS jaccard",
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def _exact_copy_members(
@@ -385,8 +370,6 @@ def _dup_member_map(
     path's choice; ~0.6s of fixed job overhead saved at sf0.1). A
     ``"persist"`` caller unpersists the map once its result is
     pinned."""
-    from pyspark.sql import Window
-
     members = _exact_copy_members(
         df, id_col, text_col, with_shingle_flag=with_shingle_flag
     )
@@ -395,20 +378,15 @@ def _dup_member_map(
     # (The previous groupBy + join-back shape scanned the corpus twice
     # and paid a second join exchange — same output, strictly more
     # stages at every scale.)
-    w = Window.partitionBy("_m")
-    cols = ["_m", "_mid", "_rep"] + (
-        ["_ghs"] if with_shingle_flag is not None else []
-    )
-    dup = (
-        members.withColumn("_gs", F.count(F.lit(1)).over(w))
-        .withColumn("_rep", F.min("_mid").over(w))
-        .filter(F.col("_gs") >= 2)
-    )
-    if with_shingle_flag is not None:
-        # group-constant (texts are byte-identical): the row's own flag
-        # is the group's flag
-        dup = dup.withColumn("_ghs", F.col("_hs"))
-    dup = dup.select(*cols)
+    dup = members.selectExpr(
+        "*",
+        "count(1) OVER (PARTITION BY _m) AS _gs",
+        "min(_mid) OVER (PARTITION BY _m) AS _rep",
+    ).filter("_gs >= 2")
+    # _ghs is group-constant (texts are byte-identical): the row's own
+    # flag is the group's flag
+    ghs = ["_hs AS _ghs"] if with_shingle_flag is not None else []
+    dup = dup.selectExpr("_m", "_mid", "_rep", *ghs)
     if materialize == "persist":
         from pyspark.storagelevel import StorageLevel
 
@@ -421,29 +399,23 @@ def _expand_rep_pairs(out: DataFrame, dup_members: DataFrame) -> DataFrame:
     = singleton = identity), and emit the intra-group (byte-identical,
     jaccard exactly 1.0) pairs directly — both joins are against the
     small dup-group map of :func:`_dup_member_map`."""
-    ea = dup_members.select(F.col("_rep").alias("id_a"), F.col("_mid").alias("_ma"))
-    eb = dup_members.select(F.col("_rep").alias("id_b"), F.col("_mid").alias("_mb"))
+    ea = dup_members.selectExpr("_rep AS id_a", "_mid AS _ma")
+    eb = dup_members.selectExpr("_rep AS id_b", "_mid AS _mb")
     cross = (
         out.join(ea, "id_a", "left")
         .join(eb, "id_b", "left")
-        .select(
-            F.least(
-                F.coalesce(F.col("_ma"), F.col("id_a")),
-                F.coalesce(F.col("_mb"), F.col("id_b")),
-            ).alias("id_a"),
-            F.greatest(
-                F.coalesce(F.col("_ma"), F.col("id_a")),
-                F.coalesce(F.col("_mb"), F.col("id_b")),
-            ).alias("id_b"),
+        .selectExpr(
+            "least(coalesce(_ma, id_a), coalesce(_mb, id_b)) AS id_a",
+            "greatest(coalesce(_ma, id_a), coalesce(_mb, id_b)) AS id_b",
             "jaccard",
         )
     )
     intra = (
-        dup_members.filter(F.col("_ghs"))
-        .select("_m", F.col("_mid").alias("id_a"))
-        .join(dup_members.select("_m", F.col("_mid").alias("id_b")), "_m")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
+        dup_members.filter("_ghs")
+        .selectExpr("_m", "_mid AS id_a")
+        .join(dup_members.selectExpr("_m", "_mid AS id_b"), "_m")
+        .filter("id_a < id_b")
+        .selectExpr("id_a", "id_b", "CAST(1 AS DOUBLE) AS jaccard")
     )
     return cross.unionByName(intra)
 
@@ -478,13 +450,14 @@ def minhash_lsh_pairs(
     proven under 64 MB; un-introspectable inputs fail open to the
     at-scale side).
 
-    - Small input: the internal materializations run in latency mode
-      (AQE off, few shuffle partitions), and the full shingle table is
-      persisted once to feed both the signature and the verify stage
-      (the "diamond"). The table is small by construction, so the
-      scoped verify's extra machinery — an eager candidate checkpoint,
-      a distinct-ids exchange, a semi-join and a second shingle pass —
-      is pure fixed overhead: on the 5k-doc benchmark corpus (4-core
+    - Small input: the whole call is one pinned query on a private
+      clone of the caller's session (:func:`latency_session`: AQE off,
+      few shuffle partitions; the caller's settings never change), and
+      the full shingle table is persisted once to feed both the
+      signature and the verify stage (the "diamond"). The table is
+      small by construction, so the scoped verify's extra machinery —
+      an eager candidate checkpoint, a distinct-ids exchange, a
+      semi-join and a second shingle pass — is pure fixed overhead: on the 5k-doc benchmark corpus (4-core
       host) this path ran 2.20 s median against 2.78 s scoped with AQE
       off and 3.70 s scoped with AQE on.
     - Otherwise (the 100 TB lever): AQE stays on (skew splitting in the
@@ -516,12 +489,21 @@ def minhash_lsh_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from implementation_of_an_etl_process_spark.plans import (
-        latency_mode,
-        small_leaf_input,
+    from implementation_of_an_etl_process_spark.plans import small_leaf_input
+    from implementation_of_an_etl_process_spark.session import (
+        latency_session,
+        rebind,
     )
 
-    small = small_leaf_input(df)
+    caller = df.sparkSession
+    scope = latency_session(caller) if small_leaf_input(df) else None
+    small = scope is not None
+    if small:
+        # every materialization below runs on the clone, the caches too
+        df = rebind(df, scope)
+    # the leaf scan is spread once, here: every later plan reads it
+    # through an exchange or a cache
+    df = spread(df)
     collapse = collapse_exact and threshold <= 1.0
     dup_members = verify_sh = None
     try:
@@ -535,46 +517,41 @@ def minhash_lsh_pairs(
             )
             # drop the NON-representative duplicate docs; everything else
             # (singletons + one rep per dup group) flows through unchanged
-            non_reps = dup_members.filter(F.col("_mid") != F.col("_rep")).select(
+            non_reps = dup_members.filter("_mid != _rep").select(
                 F.col("_mid").alias(id_col)
             )
             df = df.join(non_reps, id_col, "left_anti")
-        with latency_mode(df.sparkSession, small):
-            sh = _shingle_table(df, id_col, text_col, k)
-            if small:
-                # the diamond: one table feeds the signature AND the verify
-                # stage — persisted so it's computed once
-                sh = verify_sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            # one aggregate produces the signature AND the doc shingle-set
-            # size: the size rides along through banding into the verify
-            # arithmetic, replacing two joins against a separately-aggregated
-            # sizes table (measured ~2s of stage overhead at sf0.1, and at
-            # scale it removes one full pass over the shingle table)
-            sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
-            banded = _banded(sig, bands, n_hashes)
-            left = banded.select(
-                F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
-            )
-            right = banded.select(
-                F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "band", "bucket"
-            )
-            cand = (
-                left.join(right, ["band", "bucket"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", "_na", "_nb")
-                .distinct()
-            )
-            if not small:
-                # materialize the (small) candidate set once; the verify
-                # stage then shingles only the documents it names
-                cand = cand.localCheckpoint(eager=True)
-                verify_sh = _candidate_shingles(cand, df, id_col, text_col, k)
-            out = _jaccard_from_candidates(cand, verify_sh, threshold)
-            if collapse:
-                out = _expand_rep_pairs(out, dup_members)
-            # pin inside the block (latency_mode's contract) and before the
-            # caches the plan reads are released below
-            return out.localCheckpoint(eager=True)
+        sh = _shingle_table(df, id_col, text_col, k)
+        if small:
+            # the diamond: one table feeds the signature AND the verify
+            # stage — persisted so it's computed once
+            sh = verify_sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+        # one aggregate produces the signature AND the doc shingle-set
+        # size: the size rides along through banding into the verify
+        # arithmetic, replacing two joins against a separately-aggregated
+        # sizes table (measured ~2s of stage overhead at sf0.1, and at
+        # scale it removes one full pass over the shingle table)
+        sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
+        banded = _banded(sig, bands, n_hashes)
+        left = banded.selectExpr("_id AS id_a", "_n AS _na", "band", "bucket")
+        right = banded.selectExpr("_id AS id_b", "_n AS _nb", "band", "bucket")
+        cand = (
+            left.join(right, ["band", "bucket"])
+            .filter("id_a < id_b")
+            .select("id_a", "id_b", "_na", "_nb")
+            .distinct()
+        )
+        if not small:
+            # materialize the (small) candidate set once; the verify
+            # stage then shingles only the documents it names
+            cand = cand.localCheckpoint(eager=True)
+            verify_sh = _candidate_shingles(cand, df, id_col, text_col, k)
+        out = _jaccard_from_candidates(cand, verify_sh, threshold)
+        if collapse:
+            out = _expand_rep_pairs(out, dup_members)
+        # pin before the caches the plan reads are released below
+        out = out.localCheckpoint(eager=True)
+        return rebind(out, caller) if small else out
     finally:
         for cached in (verify_sh, dup_members):
             if cached is not None:

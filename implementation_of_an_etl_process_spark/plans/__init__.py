@@ -2,7 +2,6 @@
 
 from implementation_of_an_etl_process_spark.plans.shape import (
     explain_str,
-    latency_mode,
     leaf_scan_bytes,
     local_rows_df,
     maybe_broadcast,
@@ -18,6 +17,5 @@ __all__ = [
     "local_rows_df",
     "leaf_scan_bytes",
     "maybe_broadcast",
-    "latency_mode",
     "small_leaf_input",
 ]

@@ -11,7 +11,7 @@ on small inputs it buys linear speedup for explode/score-heavy stages
 from __future__ import annotations
 
 import os
-import threading
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,6 +60,16 @@ def maybe_broadcast(df: DataFrame, limit_bytes: int | None = None) -> DataFrame:
     return F.broadcast(df) if size <= limit else df
 
 
+# Physical operators whose output partitioning Spark learns only by
+# running jobs: exchanges (shuffle or broadcast, and AQE's wrapper around
+# them), cached relations (filled on first read) and subqueries.
+_RUNS_JOBS = re.compile(
+    r"^[\s:|+-]*(?:\*\(\d+\) )?"
+    r"(?:AdaptiveSparkPlan|InMemoryTableScan|\w*(?:Exchange|Subquery)\w*)\b",
+    re.M,
+)
+
+
 def spread(
     df: DataFrame,
     min_partitions: int | None = None,
@@ -68,6 +78,12 @@ def spread(
     """Repartition up to the session's default parallelism when the
     input has materially fewer partitions; pass through otherwise (no
     gratuitous shuffle on already-parallel inputs).
+
+    Starts no Spark job: the partition count is read only from plans
+    without an exchange, cached relation or subquery (a file scan
+    knows its splits from the file listing). Any other plan is
+    returned unchanged: reading its count would run it up to that
+    operator, which already sets its parallelism.
 
     ``by``: optional columns to HASH-partition on instead of round-robin.
     Two wins when a (reasonably uniform) key exists (guide §2.4/§2.5):
@@ -79,8 +95,10 @@ def spread(
     reuses this exchange outright (hash partitioning on a key subset
     satisfies the aggregate's ClusteredDistribution), deleting its own
     Exchange from the plan."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    if _RUNS_JOBS.search(plan):
+        return df
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() * 2 <= target:
         if by:
             cols = [F.col(c) if isinstance(c, str) else c for c in by]
@@ -172,7 +190,8 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
 
 
 #: Leaf-scan ceiling under which an operator may run its internal
-#: materializations in LATENCY mode (AQE off): below this, a
+#: materializations on a latency session (``session.latency_session``:
+#: a private clone of the caller's session with AQE off): below this, a
 #: multi-join pipeline's cost is dominated by AQE's per-shuffle-stage
 #: job scheduling (~100ms each on local[32] — measured 27 vs 12 jobs,
 #: 3.1s vs 1.9s, for the minhash hot-bucket guard at sf0.1), not by
@@ -193,80 +212,13 @@ def small_leaf_input(df: DataFrame) -> bool:
         return False
 
 
-#: Shuffle partition count inside a latency block. The block only ever
-#: covers PROVABLY-small materializations (leaf scans under
+#: Shuffle partition count of a latency session. It only ever runs
+#: PROVABLY-small materializations (leaf scans under
 #: LATENCY_MODE_LIMIT_BYTES), where 32-partition exchanges are pure
 #: task-scheduling overhead with AQE coalescing off — profiled: the
 #: minhash latency pipeline ran 26 stages × 32 tasks = 775 tasks/query
 #: at sf0.1 with every task sub-5ms. 8 keeps multi-core parallelism for
-#: the block's real work while cutting the task count 4x. At cluster
-#: scale latency mode never engages (the gate fails open), so this
+#: the real work while cutting the task count 4x. At cluster
+#: scale the latency session never engages (the gate fails open), so this
 #: constant cannot leak into big-data plans.
 LATENCY_MODE_SHUFFLE_PARTITIONS = 8
-
-
-class latency_mode:
-    """Context manager: disable AQE (and shrink the static shuffle
-    partition count to LATENCY_MODE_SHUFFLE_PARTITIONS) for actions run
-    inside the block, restoring previous settings on exit — the
-    small-input latency path for operators whose internal pipelines pay
-    more in AQE stage scheduling and per-task overhead than they could
-    gain from runtime re-planning. Callers MUST materialize
-    (checkpoint/collect) inside the block; lazy frames escaping the
-    block run under the restored settings.
-
-    The flags are SESSION-GLOBAL, so nesting/overlap is handled with
-    a per-session re-entrancy counter under a lock: only the outermost
-    enter records the true original values and only the last exit
-    restores them (a naive save/restore would re-instate the inner
-    block's values as the "original"). Caveat that can't be fixed
-    here: any UNRELATED query running concurrently on the same
-    SparkSession (multi-threaded driver, streaming micro-batches)
-    executes with these settings while a latency block is active —
-    operators use this only around their own small-input
-    materializations, and multi-query drivers should serialize around
-    it."""
-
-    _lock = threading.RLock()
-    #: id(session) -> [depth, {key: original-value}]; removed at depth 0
-    _active: dict[int, list] = {}
-
-    def __init__(self, spark, enabled: bool = True):
-        self._spark = spark
-        self._enabled = enabled
-
-    def __enter__(self):
-        if self._enabled:
-            with self._lock:
-                st = self._active.get(id(self._spark))
-                if st is None:
-                    conf = self._spark.conf
-                    old = {
-                        "spark.sql.adaptive.enabled": conf.get(
-                            "spark.sql.adaptive.enabled", "true"
-                        ),
-                        "spark.sql.shuffle.partitions": conf.get(
-                            "spark.sql.shuffle.partitions", "200"
-                        ),
-                    }
-                    self._active[id(self._spark)] = [1, old]
-                    conf.set("spark.sql.adaptive.enabled", "false")
-                    conf.set(
-                        "spark.sql.shuffle.partitions",
-                        str(LATENCY_MODE_SHUFFLE_PARTITIONS),
-                    )
-                else:
-                    st[0] += 1
-        return self
-
-    def __exit__(self, *exc):
-        if self._enabled:
-            with self._lock:
-                st = self._active.get(id(self._spark))
-                if st is None:  # unbalanced exit — nothing to restore
-                    return
-                st[0] -= 1
-                if st[0] <= 0:
-                    del self._active[id(self._spark)]
-                    for k, v in st[1].items():
-                        self._spark.conf.set(k, v)

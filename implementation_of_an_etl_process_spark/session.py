@@ -12,7 +12,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from implementation_of_an_etl_process_spark.plans.shape import (
+    LATENCY_MODE_SHUFFLE_PARTITIONS,
+)
 
 DEFAULT_APP_NAME = "implementation-of-an-etl-process-spark"
 
@@ -44,6 +48,37 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)
     return spark
+
+
+def latency_session(spark: SparkSession) -> SparkSession | None:
+    """A private clone of ``spark`` for small-input materializations:
+    AQE off and ``LATENCY_MODE_SHUFFLE_PARTITIONS`` static shuffle
+    partitions (see ``plans.shape``). The clone copies the caller's
+    conf (``ensure_engine_confs`` included) and shares its SparkContext
+    and cache, so the caller's session keeps its own settings, also for
+    queries other threads run on it meanwhile. Returns None for
+    sessions without a JVM session (Spark Connect): callers then stay
+    on the AQE path."""
+    jparent = getattr(spark, "_jsparkSession", None)
+    if jparent is None:
+        return None
+    clone = SparkSession(spark.sparkContext, jparent.cloneSession())
+    clone.conf.set("spark.sql.adaptive.enabled", "false")
+    clone.conf.set(
+        "spark.sql.shuffle.partitions", str(LATENCY_MODE_SHUFFLE_PARTITIONS)
+    )
+    return clone
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``spark`` (a classic session
+    sharing ``df``'s SparkContext): actions on the result plan and run
+    under ``spark``'s settings."""
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset  # noqa: SLF001
+    return DataFrame(
+        jds.ofRows(spark._jsparkSession, df._jdf.logicalPlan()),  # noqa: SLF001
+        spark,
+    )
 
 
 def default_cpus() -> int:

@@ -216,6 +216,105 @@ def test_minhash_releases_its_caches(spark, gated_docs):
     assert n_cached() == before
 
 
+def test_minhash_leaves_caller_session_conf_alone(spark, tmp_path):
+    """On the small side of the gate the call plans and runs on a
+    private session: a second thread polling the caller's AQE and
+    shuffle-partition settings reads the caller's own values for the
+    whole call."""
+    import threading
+
+    from implementation_of_an_etl_process_spark.plans import small_leaf_input
+
+    rows = [(i, f"{OTHER} {BASE} v{i % 40}") for i in range(400)]
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(
+        str(tmp_path / "docs")
+    )
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    assert small_leaf_input(docs)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    old_parts = spark.conf.get(keys[1])
+    # a value the latency session (8 partitions) cannot be mistaken for
+    spark.conf.set(keys[1], "11")
+    try:
+        own = tuple(spark.conf.get(k) for k in keys)
+        seen, done = [], threading.Event()
+
+        def poll():
+            while not done.is_set():
+                seen.append(tuple(spark.conf.get(k) for k in keys))
+
+        poller = threading.Thread(target=poll)
+        poller.start()
+        try:
+            n = D.minhash_lsh_pairs(docs, "doc_id", "text").count()
+        finally:
+            done.set()
+            poller.join(timeout=60)
+    finally:
+        spark.conf.set(keys[1], old_parts)
+    assert not poller.is_alive()
+    assert n > 0
+    assert seen and set(seen) == {own}, set(seen)
+
+
+def _column_api_signature(sh, n_hashes):
+    """``minhash_signature`` as the Column API built it before the SQL
+    string build: the oracle for the values persisted indexes hold."""
+    aggs = [
+        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
+        for i in range(n_hashes)
+    ]
+    return sh.groupBy("_id").agg(*aggs, F.count(F.lit(1)).alias("_n"))
+
+
+def _column_api_banded(sig, bands, n_hashes):
+    """``_banded`` as the Column API built it (see above)."""
+    rows = n_hashes // bands
+    band_cols = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.hash(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
+                    "bucket"
+                ),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select("_id", "_n", F.explode(band_cols).alias("bb")).select(
+        "_id",
+        "_n",
+        F.col("bb.band").alias("band"),
+        F.col("bb.bucket").alias("bucket"),
+    )
+
+
+@pytest.mark.parametrize("n_hashes, bands", [(32, 8), (64, 16)])
+def test_minhash_bucket_values_cannot_drift(spark, n_hashes, bands):
+    """Signature and (band, bucket) values equal the Column-API build's
+    on a seeded corpus, so dedup indexes written before stay valid."""
+    import random
+
+    rng = random.Random(20)
+    words = [f"w{i}" for i in range(30)]
+    rows = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randint(1, 25))))
+        for i in range(300)
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    sh = D._shingle_table(docs, "doc_id", "text", 3)
+    sig = D.minhash_signature(sh, n_hashes=n_hashes, include_size=True)
+    want_sig = _column_api_signature(sh, n_hashes)
+    assert sig.dtypes == want_sig.dtypes
+    assert sorted(sig.collect()) == sorted(want_sig.collect())
+    got = D._banded(sig, bands, n_hashes)
+    want = _column_api_banded(want_sig, bands, n_hashes)
+    assert got.dtypes == want.dtypes
+    got_rows = sorted(got.collect())
+    assert len(got_rows) == bands * sig.count()
+    assert got_rows == sorted(want.collect())
+
+
 def test_simhash_identical_and_near(docs):
     pairs = {
         (r.id_a, r.id_b): r.hamming

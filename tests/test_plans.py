@@ -303,65 +303,79 @@ def test_materialize_mixture_two_scans_no_bnlj(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_latency_mode_restores_aqe(spark):
-    """latency_mode must flip AQE off only inside the block and restore
-    the prior setting on both clean exit and exception."""
-    from implementation_of_an_etl_process_spark.plans import latency_mode
+def test_latency_session_is_a_scoped_clone(spark):
+    """The small-input session is a clone: AQE off and the latency
+    shuffle partitions, the caller's other confs copied (time zone),
+    the caller's own settings untouched, and a frame rebound to the
+    caller plans under the caller's settings again."""
+    import re
 
     from implementation_of_an_etl_process_spark.plans.shape import (
         LATENCY_MODE_SHUFFLE_PARTITIONS,
     )
+    from implementation_of_an_etl_process_spark.session import (
+        latency_session,
+        rebind,
+    )
 
-    key = "spark.sql.adaptive.enabled"
-    skey = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    sbefore = spark.conf.get(skey)
-    with latency_mode(spark, True):
-        assert spark.conf.get(key) == "false"
-        # r14: the block also shrinks the static shuffle partition
-        # count (AQE coalescing is off inside it, and the block only
-        # covers provably-small materializations)
-        assert spark.conf.get(skey) == str(LATENCY_MODE_SHUFFLE_PARTITIONS)
-    assert spark.conf.get(key) == before
-    assert spark.conf.get(skey) == sbefore
+    tz = "spark.sql.session.timeZone"
+    before = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions", tz)
+    }
+    spark.conf.set(tz, "America/Los_Angeles")
     try:
-        with latency_mode(spark, True):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get(key) == before
-    assert spark.conf.get(skey) == sbefore
-    # disabled: a no-op
-    with latency_mode(spark, False):
-        assert spark.conf.get(key) == before
-        assert spark.conf.get(skey) == sbefore
+        clone = latency_session(spark)
+    finally:
+        spark.conf.set(tz, before[tz])
+    assert clone.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert clone.conf.get("spark.sql.shuffle.partitions") == str(
+        LATENCY_MODE_SHUFFLE_PARTITIONS
+    )
+    assert clone.conf.get(tz) == "America/Los_Angeles"
+    assert {k: spark.conf.get(k) for k in before} == before
+    assert clone.sparkContext is spark.sparkContext
+
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    on_clone = rebind(agg, clone)
+    assert "AdaptiveSparkPlan" not in explain_str(on_clone)
+    assert re.search(
+        rf"hashpartitioning\(\w+#\d+L?, {LATENCY_MODE_SHUFFLE_PARTITIONS}\)",
+        explain_str(on_clone),
+    )
+    back = rebind(on_clone, spark)
+    assert "AdaptiveSparkPlan" in explain_str(back)
+    assert sorted(back.collect()) == sorted(agg.collect())
 
 
-def test_latency_mode_nesting_restores_true_original(spark):
-    """Nested/overlapping blocks must restore the TRUE original value
-    on the last exit — a naive save/restore would record the inner
-    block's 'false' as the original (ADVICE round 7). Also: interleaved
-    (non-LIFO) overlap via manual __enter__/__exit__ ordering."""
-    from implementation_of_an_etl_process_spark.plans import latency_mode
+def test_spread_starts_no_job(spark, tmp_path):
+    """spread() reads partition counts without running the plan: over
+    a persisted, shuffled relation (AQE on) it starts no Spark job,
+    and a single-file parquet scan is still spread to the default
+    parallelism."""
+    from implementation_of_an_etl_process_spark.plans import spread
 
-    key = "spark.sql.adaptive.enabled"
-    before = spark.conf.get(key)
-    with latency_mode(spark, True):
-        assert spark.conf.get(key) == "false"
-        with latency_mode(spark, True):
-            assert spark.conf.get(key) == "false"
-        # inner exit must NOT restore yet (outer block still active)
-        assert spark.conf.get(key) == "false"
-    assert spark.conf.get(key) == before
-    # interleaved: a exits before b (simulates two driver threads)
-    a = latency_mode(spark, True)
-    b = latency_mode(spark, True)
-    a.__enter__()
-    b.__enter__()
-    a.__exit__(None, None, None)
-    assert spark.conf.get(key) == "false"
-    b.__exit__(None, None, None)
-    assert spark.conf.get(key) == before
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    shuffled = (
+        spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    )
+    group = "test_spread_starts_no_job"
+    sc.setJobGroup(group, "spread over a persisted aggregate")
+    try:
+        out = spread(shuffled.select("k", "count"))
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        shuffled.unpersist()
+    assert jobs == []
+    assert out.count() == 7
+
+    spark.range(50).coalesce(1).write.parquet(str(tmp_path / "one"))
+    scan = spark.read.parquet(str(tmp_path / "one"))
+    assert scan.rdd.getNumPartitions() == 1
+    assert spread(scan).rdd.getNumPartitions() == sc.defaultParallelism
 
 
 def test_minhash_latency_gate_and_conf_restoration(spark):
