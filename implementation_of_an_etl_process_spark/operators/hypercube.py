@@ -133,47 +133,55 @@ def reference_hypercube(
         # This is the reference's derived phase-5 trick (client
         # distincts computed FROM per-group contract sets,
         # ETL.java:226-252) pushed one level further.
+        # Built from SQL strings: each PySpark Column call costs about
+        # 12 py4j round trips, a selectExpr 1 and an F.expr 3.
         lvl1 = (
-            invoices.select(
-                F.col("id_contract").alias("contract_id"),
-                "time",
-                "amount",
-                "consumption",
+            invoices.selectExpr(
+                "id_contract AS contract_id", "time", "amount", "consumption"
             )
             .groupBy("contract_id", "time")
             .agg(
-                F.sum("consumption").alias("_c"),
-                F.sum(F.col("amount").cast("double")).alias("_a"),
-                F.count(F.lit(1)).alias("_n"),
+                *map(
+                    F.expr,
+                    [
+                        "sum(consumption) AS _c",
+                        "sum(CAST(amount AS DOUBLE)) AS _a",
+                        "count(1) AS _n",
+                    ],
+                )
             )
         )
-        contract_map = contracts.select(
-            F.col("id").alias("contract_id"),
-            F.col("id_client").alias("client_id"),
-            "nature",
+        contract_map = contracts.selectExpr(
+            "id AS contract_id", "id_client AS client_id", "nature"
         )
         lvl2 = (
             denormalize(lvl1, [(contract_map, "contract_id", "inner")])
             .groupBy("client_id", "nature", "time")
             .agg(
-                F.sum("_c").alias("_c"),
-                F.sum("_a").alias("_a"),
-                F.sum("_n").alias("_n"),
-                F.count(F.lit(1)).alias("_nk"),
+                *map(
+                    F.expr,
+                    [
+                        "sum(_c) AS _c",
+                        "sum(_a) AS _a",
+                        "sum(_n) AS _n",
+                        "count(1) AS _nk",
+                    ],
+                )
             )
         )
-        client_map = clients.select(
-            F.col("id").alias("client_id"), "type", "geo", "misc"
-        )
+        client_map = clients.selectExpr("id AS client_id", "type", "geo", "misc")
         return build_cube(
             denormalize(lvl2, [(client_map, "client_id", "inner")]),
             dims,
             [
-                F.sum("_c").cast("long").alias("consumption"),
-                F.round(F.sum("_a"), 2).alias("amount"),
-                F.count(F.lit(1)).cast("long").alias("nclients"),
-                F.sum("_nk").cast("long").alias("ncontracts"),
-                F.sum("_n").alias("ninvoices"),
+                F.expr(e)
+                for e in (
+                    "CAST(sum(_c) AS BIGINT) AS consumption",
+                    "round(sum(_a), 2) AS amount",
+                    "CAST(count(1) AS BIGINT) AS nclients",
+                    "CAST(sum(_nk) AS BIGINT) AS ncontracts",
+                    "sum(_n) AS ninvoices",
+                )
             ],
         )
 

@@ -25,6 +25,11 @@ BROADCAST_LIMIT_BYTES = int(
 )
 
 
+# A Range leaf under one of these numbers the map's work (splits,
+# files), so its 8 bytes per row say nothing of what the map reads.
+_PYTHON_MAPS = ("MapInArrow", "MapInPandas")
+
+
 def leaf_scan_bytes(df: DataFrame) -> int:
     """Sum of Catalyst's size estimates over the plan's LEAF relations.
 
@@ -34,12 +39,25 @@ def leaf_scan_bytes(df: DataFrame) -> int:
     node without CBO stats is the *product* of its children (measured:
     a 3 MB x 300 KB join "estimated" at 859 GB), which would veto every
     broadcast. Leaves (parquet scans) carry real file sizes.
+
+    A ``Range`` that feeds a Python map (``read_invoices_bin``'s split
+    numbers) counts as ``spark.sql.defaultSizeInBytes``, the unknown
+    size a ``LogicalRDD`` leaf reports.
     """
     plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
-    leaves = plan.collectLeaves()
-    return sum(
-        int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())
-    )
+    total, stack = 0, [(plan, "")]
+    while stack:  # (node, its parent's name)
+        node, parent = stack.pop()
+        kids = node.children()
+        n = kids.size()
+        if n:
+            name = node.nodeName()
+            stack.extend((kids.apply(i), name) for i in range(n))
+        elif parent in _PYTHON_MAPS and node.nodeName() == "Range":
+            total += int(node.conf().defaultSizeInBytes())
+        else:
+            total += int(node.stats().sizeInBytes())
+    return total
 
 
 def maybe_broadcast(df: DataFrame, limit_bytes: int | None = None) -> DataFrame:

@@ -6,11 +6,22 @@ memory limit or physical RAM (override: ``SPARK_DRIVER_MEMORY``). On a
 real cluster the same settings (AQE on, adaptive coalescing, skew-join
 handling) are the ones that matter at 100 TB — partition counts are then
 driven by AQE rather than the static ``spark.sql.shuffle.partitions``.
+
+Python workers: a local session forks its workers from the engine's
+daemon (``worker_daemon``), which skips the stock worker's per-task
+import-cache flush when nothing on the import path changed. Spark
+starts that daemon as ``python -m
+implementation_of_an_etl_process_spark.worker_daemon``, so the package
+must be importable by the workers: its root is the working directory,
+on ``PYTHONPATH`` or in site-packages. The invoice decoder needs the
+same, since its closure refers to ``sources.binary`` by name. Where the
+package is not on that path, the session keeps PySpark's stock daemon.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,6 +90,21 @@ def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
         jds.ofRows(spark._jsparkSession, df._jdf.logicalPlan()),  # noqa: SLF001
         spark,
     )
+
+
+def _package_on_worker_path() -> bool:
+    """True when a Python worker that the JVM starts from this process
+    (same working directory, same environment) imports this package:
+    its root is the working directory (``python -m`` puts it first on
+    the path), on ``PYTHONPATH``, or a site-packages directory."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    paths = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def default_cpus() -> int:
@@ -183,6 +209,14 @@ def get_spark(
                 pass
         if local_dir:
             builder = builder.config("spark.local.dir", local_dir)
+        # Workers from the engine's daemon: no per-task import-cache
+        # flush (see worker_daemon). Local only: the driver cannot see
+        # an executor host's import path.
+        if _package_on_worker_path():
+            builder = builder.config(
+                "spark.python.daemon.module",
+                "implementation_of_an_etl_process_spark.worker_daemon",
+            )
     # Generic conf passthrough: "k=v;k2=v2" in SPARK_GRAFT_CONF. The
     # documented hook for host-specific tuning (shuffle codec, adaptive
     # thresholds) and for A/B measurement without code edits — explicit

@@ -8,18 +8,22 @@ file in lock-guarded chunks across N threads (``ETL.java:129-152``).
 Spark-first equivalent: plan byte-range splits on the driver (metadata
 only, ``plan_splits``), then decode each split inside ``mapInArrow``
 with a vectorized numpy structured-dtype view (``decode``) — Arrow
-batches out, zero per-record Python. Splits are independent, so this
-scales exactly like a parquet scan: more files/bytes -> more splits ->
-more tasks. The ``invoicebin`` Python DataSource
-(``invoice_datasource.py``) uses the same record dtype, split planner
-and decoder.
+batches out, zero per-record Python. The split list never becomes
+Python rows: ``spark.range`` numbers the splits in the JVM, one per
+partition, and the decode closure maps split number i to its byte range
+(``FileSplits``). Splits are independent, so this scales exactly like a
+parquet scan: more files/bytes -> more splits -> more tasks. The
+``invoicebin`` Python DataSource (``invoice_datasource.py``) uses the
+same record dtype, split planner and decoder.
 """
 
 from __future__ import annotations
 
+import bisect
 import glob
+import itertools
 import os
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -53,26 +57,40 @@ _DECODED = {
 # size, ETL.java:287-290).
 DEFAULT_SPLIT_BYTES = 32 * 1024 * 1024
 
-_SPLIT_SCHEMA = "path string, offset long, nbytes long"
 
+class FileSplits(Sequence):
+    """The ``(file, offset, nbytes)`` splits of ``(file, start, end)``
+    byte spans, cut every ``split_bytes``, found by number: split i is
+    located by a binary search over cumulative per-span split counts.
+    An instance holds one entry per span, so it pickles to the same
+    size however many splits the spans cut into."""
 
-def split_ranges(
-    spans: Iterable[tuple[str, int, int]], split_bytes: int
-) -> list[tuple[str, int, int]]:
-    """Cut ``(file, start, end)`` byte spans into ``(file, offset,
-    nbytes)`` splits of at most ``split_bytes``."""
-    if split_bytes <= 0 or split_bytes % RECORD_LEN:
-        raise ValueError(
-            f"split_bytes must be a positive multiple of {RECORD_LEN}"
+    def __init__(self, spans: Iterable[tuple[str, int, int]], split_bytes: int):
+        if split_bytes <= 0 or split_bytes % RECORD_LEN:
+            raise ValueError(
+                f"split_bytes must be a positive multiple of {RECORD_LEN}"
+            )
+        self.spans = list(spans)
+        self.split_bytes = split_bytes
+        self.ends = list(
+            itertools.accumulate(
+                len(range(start, end, split_bytes)) for _, start, end in self.spans
+            )
         )
-    return [
-        (f, off, min(split_bytes, end - off))
-        for f, start, end in spans
-        for off in range(start, end, split_bytes)
-    ]
+
+    def __len__(self) -> int:
+        return self.ends[-1] if self.ends else 0
+
+    def __getitem__(self, i: int) -> tuple[str, int, int]:
+        if not 0 <= i < len(self):
+            raise IndexError(i)
+        k = bisect.bisect_right(self.ends, i)
+        path, start, end = self.spans[k]
+        offset = start + (i - (self.ends[k - 1] if k else 0)) * self.split_bytes
+        return path, offset, min(self.split_bytes, end - offset)
 
 
-def plan_splits(path: str, split_bytes: int) -> list[tuple[str, int, int]]:
+def plan_splits(path: str, split_bytes: int) -> FileSplits:
     """Metadata-only split planning for a file or glob."""
     files = sorted(glob.glob(path)) if any(c in path for c in "*?[") else [path]
     if not files:
@@ -102,7 +120,7 @@ def plan_splits(path: str, split_bytes: int) -> list[tuple[str, int, int]]:
                 f"{RECORD_LEN}-byte records"
             )
         spans.append((f, 0, size))
-    return split_ranges(spans, split_bytes)
+    return FileSplits(spans, split_bytes)
 
 
 def decode(
@@ -140,18 +158,19 @@ def read_invoices_bin(
     Arrow boundary (230 MB saved at the 57.6M-record benchmark scale).
     """
     splits = plan_splits(path, split_bytes)
-    # One task per split: repartition the tiny split table, then decode.
-    splits_df = spark.createDataFrame(splits, _SPLIT_SCHEMA).repartition(len(splits))
 
     def decode_splits(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
-            cols = batch.to_pydict()
-            for f, off, n in zip(cols["path"], cols["offset"], cols["nbytes"]):
-                yield from decode(f, off, n, keep_id)
+            for i in batch.column(0).to_pylist():
+                yield from decode(*splits[i], keep_id)
 
     schema = (
         schemas.INVOICES
         if keep_id
         else T.StructType([f for f in schemas.INVOICES if f.name != "id"])
     )
-    return splits_df.mapInArrow(decode_splits, schema=schema)
+    # One task per split, numbered by the JVM: no Python split rows and
+    # no exchange below the decode.
+    return spark.range(
+        len(splits), numPartitions=max(1, len(splits))
+    ).mapInArrow(decode_splits, schema=schema)

@@ -39,9 +39,9 @@ from implementation_of_an_etl_process_spark.sources.binary import (
     DEFAULT_SPLIT_BYTES,
     INVOICE_DTYPE,
     RECORD_LEN,
+    FileSplits,
     decode,
     plan_splits,
-    split_ranges,
 )
 
 
@@ -111,7 +111,7 @@ class InvoiceBinaryStreamReader(DataSourceStreamReader):
         ]
         out: list[InputPartition] = [
             InvoiceSplit(*split)
-            for split in split_ranges(spans, self.split_bytes)
+            for split in FileSplits(spans, self.split_bytes)
         ]
         if not out:  # Spark requires >= 1 partition per batch
             out.append(InvoiceSplit("", 0, 0))

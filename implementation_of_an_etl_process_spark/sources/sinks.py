@@ -69,14 +69,13 @@ def write_reference_csv(df: DataFrame, path: str) -> str:
       NO leading zero before the point (0.47 -> ".47", -0.3 -> "-.30",
       ETL.java:255,266)
     """
-    amount_fmt = F.regexp_replace(
-        F.format_string("%.2f", F.col("amount")), r"^(-?)0\.", r"$1."
-    )
-    out = df.select(
+    out = df.selectExpr(
         "geo", "type", "misc", "nature", "time", "consumption",
-        amount_fmt.alias("amount"),
+        # r'' keeps the regex free of SQL escape handling
+        r"regexp_replace(format_string('%.2f', amount), r'^(-?)0\.', '$1.')"
+        " AS amount",
         "nclients",
-        F.col("ncontracts").alias("ncontrats"),
+        "ncontracts AS ncontrats",
         "ninvoices",
     )
     return write_csv(out, path, single_file=True)

@@ -269,3 +269,134 @@ def test_zorder_column_all_null_and_empty_inputs(spark):
     assert (
         empty.withColumn("_z", zorder_column(empty, ["id"])).count() == 0
     )
+
+
+def test_invoice_reader_numbers_splits_in_the_jvm(spark, bin_path):
+    """The split list is a JVM range, one partition per split, so the
+    decode has no exchange (and no Python split stage) below it."""
+    from implementation_of_an_etl_process_spark.plans import explain_str
+    from implementation_of_an_etl_process_spark.sources import read_invoices_bin
+    from implementation_of_an_etl_process_spark.sources.binary import plan_splits
+
+    split_bytes = 16 * 4096
+    df = read_invoices_bin(spark, bin_path, split_bytes=split_bytes)
+    plan = explain_str(df, "simple")
+    assert "MapInArrow" in plan and "Range" in plan, plan
+    assert "Exchange" not in plan, plan
+    n = len(plan_splits(bin_path, split_bytes))
+    assert n == -(-os.path.getsize(bin_path) // split_bytes) > 1
+    assert df.rdd.getNumPartitions() == n
+    assert df.count() == os.path.getsize(bin_path) // 16
+
+
+def test_invoice_frame_stays_unknown_size_to_the_gates(spark, bin_path, tmp_path):
+    """A range-numbered invoice frame sizes like the pickled split RDD
+    it replaced (``spark.sql.defaultSizeInBytes``): never small, never
+    broadcast. Other frames keep their leaf sizes."""
+    from implementation_of_an_etl_process_spark.plans import (
+        leaf_scan_bytes,
+        local_rows_df,
+        maybe_broadcast,
+        small_leaf_input,
+    )
+    from implementation_of_an_etl_process_spark.sources import read_invoices_bin
+
+    unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    rdd_backed = spark.createDataFrame([(1,)], "a int").repartition(2)
+    assert leaf_scan_bytes(rdd_backed) == unknown
+    invoices = read_invoices_bin(spark, bin_path)
+    for df in (invoices, invoices.select("id_contract").filter("time > 0")):
+        assert leaf_scan_bytes(df) == unknown
+        assert not small_leaf_input(df)
+        assert maybe_broadcast(df) is df
+
+    def ident(batches):
+        yield from batches
+
+    spark.range(100).write.parquet(str(tmp_path / "ids"))
+    ids = spark.read.parquet(str(tmp_path / "ids"))
+    mapped = ids.mapInArrow(ident, ids.schema)
+    assert 0 < leaf_scan_bytes(mapped) == leaf_scan_bytes(ids) < unknown
+    assert leaf_scan_bytes(local_rows_df(spark, [(1,)], "a int")) == 8
+
+
+def test_invoice_reader_closure_grows_with_files_not_splits(spark, tmp_path):
+    """The decode closure carries the file list, not the split list:
+    one file cut 10 or 10,000 ways pickles to within 1 KB."""
+    import numpy as np
+
+    from implementation_of_an_etl_process_spark.sources import read_invoices_bin
+
+    path = tmp_path / "invoices.bin"
+    np.zeros(10_000, dtype="V16").tofile(path)
+
+    def command_bytes(split_bytes: int) -> int:
+        df = read_invoices_bin(spark, str(path), split_bytes=split_bytes)
+        node = df._jdf.queryExecution().analyzed()
+        assert node.nodeName() == "MapInArrow"
+        assert df.rdd.getNumPartitions() == 160_000 // split_bytes
+        return node.functionExpr().func().command().length()
+
+    assert abs(command_bytes(16_000) - command_bytes(16)) < 1024
+
+
+def test_invoice_reader_glob_matches_datasource(spark, bin_path, tmp_path):
+    """Two files under one glob: the range-numbered reader cuts each
+    file into the DataSource's splits and decodes the same rows."""
+    from implementation_of_an_etl_process_spark.sources import read_invoices_bin
+    from implementation_of_an_etl_process_spark.sources.invoice_datasource import (
+        InvoiceBinaryDataSource,
+    )
+
+    data = open(bin_path, "rb").read()
+    cut = 16 * 1001
+    (tmp_path / "a.bin").write_bytes(data[:cut])
+    (tmp_path / "b.bin").write_bytes(data[cut:])
+    pattern = str(tmp_path / "*.bin")
+    split_bytes = 16 * 4096
+    spark.dataSource.register(InvoiceBinaryDataSource)
+    via_ds = (
+        spark.read.format("invoicebin")
+        .option("path", pattern)
+        .option("split_bytes", split_bytes)
+        .load()
+    )
+    via_range = read_invoices_bin(spark, pattern, split_bytes=split_bytes)
+    assert via_range.rdd.getNumPartitions() == via_ds.rdd.getNumPartitions() == (
+        1 + -(-(len(data) - cut) // split_bytes)
+    )
+    order = ["id", "id_contract", "time", "consumption", "amount"]
+    a = via_ds.orderBy(*order).toPandas()
+    b = via_range.orderBy(*order).toPandas()
+    assert len(b) == len(data) // 16
+    assert a.equals(b)
+
+
+def test_file_splits_index_like_enumerated_ranges():
+    """Split i found by arithmetic is split i of the enumerated cut,
+    for empty, truncated, offset and multi-span inputs."""
+    import random
+
+    from implementation_of_an_etl_process_spark.sources.binary import FileSplits
+
+    def enumerated(spans, split_bytes):
+        return [
+            (f, off, min(split_bytes, end - off))
+            for f, start, end in spans
+            for off in range(start, end, split_bytes)
+        ]
+
+    rng = random.Random(7)
+    for _ in range(200):
+        spans = [
+            (f"f{k}", 16 * rng.randrange(0, 20), 16 * rng.randrange(0, 40))
+            for k in range(rng.randrange(0, 6))
+        ]
+        split_bytes = 16 * rng.randrange(1, 9)
+        splits = FileSplits(spans, split_bytes)
+        assert list(splits) == enumerated(spans, split_bytes)
+        assert len(splits) == len(enumerated(spans, split_bytes))
+        with pytest.raises(IndexError):
+            splits[len(splits)]
+    with pytest.raises(ValueError, match="multiple of 16"):
+        FileSplits([("f", 0, 32)], 24)
