@@ -25,6 +25,9 @@ Jaccard re-verifies, so precision is unaffected by banding.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,6 +42,7 @@ from implementation_of_an_etl_process_spark.functions.vectors import (
     quantize_vec,
 )
 from implementation_of_an_etl_process_spark.plans import spread
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 # ---------------------------------------------------------------------------
 # Exact / fingerprint dedup
@@ -128,12 +132,6 @@ def drop_exact_duplicates(df: DataFrame, keys: list[str], id_col: str) -> DataFr
         F.col("rep_id").alias(id_col)
     )
     return df.join(reps, id_col, "left_semi")
-
-
-def _local_ids(spark, ids, col: str):
-    from implementation_of_an_etl_process_spark.plans import local_rows_df
-
-    return local_rows_df(spark, [(int(i),) for i in ids], f"{col} long")
 
 
 def fingerprint_md5(df: DataFrame, text_col: str, *, normalize: bool = True) -> Column:
@@ -1049,14 +1047,17 @@ def drop_near_duplicates_keep_best(
     return unclustered.unionByName(best)
 
 
-def _exact_tier(
-    new: DataFrame, id_col: str, text_col: str, hist_md5: DataFrame
-) -> DataFrame:
-    """New-side ids whose normalized md5 appears in ``hist_md5`` (a
-    one-column 'm' relation) — shared by the inline and indexed paths."""
-    new_md5 = new.select(
-        F.col(id_col).alias("_id"), fingerprint_md5(new, text_col).alias("m")
+def _md5_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(_id, m): each document's normalized md5 fingerprint."""
+    return df.select(
+        F.col(id_col).alias("_id"), fingerprint_md5(df, text_col).alias("m")
     )
+
+
+def _exact_tier(new_md5: DataFrame, hist_md5: DataFrame) -> DataFrame:
+    """New-side ids (from :func:`_md5_rows`) whose fingerprint appears
+    in ``hist_md5`` (a one-column 'm' relation) — shared by the inline
+    and indexed paths."""
     return (
         new_md5.join(hist_md5, "m", "left_semi")
         .select("_id")
@@ -1196,7 +1197,7 @@ def incremental_dedup(
     if collapse_exact:
         new, dup_members = _collapse_new_side(new, id_col, text_col)
     hist_md5 = hist.select(fingerprint_md5(hist, text_col).alias("m")).distinct()
-    exact_ids = _exact_tier(new, id_col, text_col, hist_md5)
+    exact_ids = _exact_tier(_md5_rows(new, id_col, text_col), hist_md5)
     # near tier: one signature pass over the side-namespaced union
     keyed = _ns_keyed(hist, 0, id_col, text_col).unionByName(
         _ns_keyed(new, 1, id_col, text_col)
@@ -1243,7 +1244,7 @@ def write_dedup_index(
     """Materialize the dedup index :func:`incremental_dedup`'s docstring
     promises: two parquet relations derived from the corpus —
 
-    - ``md5``: distinct normalized-text fingerprints (the exact tier);
+    - ``md5``: id-keyed normalized-text fingerprints (the exact tier);
     - ``bands``: (id, _n, band, bucket) banding rows (the near tier),
       written partitioned by ``band`` so a batch's banding join prunes
       to the partitions it actually probes.
@@ -1254,13 +1255,10 @@ def write_dedup_index(
     built with different parameters, since bucket hashes would silently
     never collide.
 
-    Torn-append guard: an append spans two parquet relations (md5,
-    bands), so a crash between them would leave a batch in the exact
-    tier but not the near tier. A ``_pending_append`` marker is written
-    before the first relation write and removed after the last; both
-    later appends and classification reads refuse an index whose marker
-    is still present (repair path: rebuild with ``mode="overwrite"``,
-    which clears the marker).
+    A write spans two relations, so builds and appends hold the writer
+    marker and release it only on success (:mod:`..sources.indexdir`):
+    a crash between them is a loud torn-append error, never an index
+    whose exact and near tiers disagree.
 
     Layout versioning (BREAKING, deliberate): round-11 moved the md5
     relation from distinct fingerprints (v1) to id-keyed rows (v2) so
@@ -1273,9 +1271,6 @@ def write_dedup_index(
     over the same corpus (one tokenize+minhash pass — the same cost as
     the original v1 build; no state beyond the corpus is needed).
     """
-    import json
-    import os
-
     sh = _shingle_table(docs, id_col, text_col, k)
     sig = minhash_signature(sh, n_hashes=n_hashes, include_size=True)
     banded = _banded(sig, bands, n_hashes)
@@ -1287,59 +1282,29 @@ def write_dedup_index(
         "id_col": id_col,
     }
     if mode == "append":
-        pending_path = _begin_index_append(path, meta)
+        _check_index_params(path, meta)
     else:
-        meta_path = os.path.join(path, "meta.json")
-        pending_path = os.path.join(path, "_pending_append")
-        # meta FIRST: a crash mid-build then leaves meta-without-data,
-        # which fails loudly at read time; the reverse ordering would
-        # leave data-without-meta, letting a mismatched append slip
-        # through the append-time guard.
-        os.makedirs(path, exist_ok=True)
-        # a fresh overwrite repairs any earlier torn append
-        if os.path.exists(pending_path):
-            os.remove(pending_path)
-        dels = os.path.join(path, "_deletes")
-        if os.path.exists(dels):
-            # a rebuild has no tombstones (stale ones would filter
-            # freshly-written rows — the text index's caught bug class)
-            import shutil
-
-            shutil.rmtree(dels)
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
-        pending_path = None
-    # md5 relation keyed by id (v2): a doc's exact-tier evidence is
-    # individually removable; the probe's semi-join on m makes the
-    # per-doc (vs distinct) layout semantically identical
-    docs.select(
-        F.col(id_col), fingerprint_md5(docs, text_col).alias("m")
-    ).write.mode(mode).parquet(os.path.join(path, "md5"))
-    banded.withColumnRenamed("_id", id_col).withColumnRenamed(
-        "_n", "n_shingles"
-    ).write.mode(mode).partitionBy("band").parquet(os.path.join(path, "bands"))
-    if pending_path is not None:
-        os.remove(pending_path)
+        indexdir.reset(path)
+    with indexdir.writer(path):
+        if mode != "append":
+            indexdir.write_meta(path, meta)
+        # md5 relation keyed by id (v2): a doc's exact-tier evidence is
+        # individually removable; the probe's semi-join on m makes the
+        # per-doc (vs distinct) layout semantically identical
+        docs.select(
+            F.col(id_col), fingerprint_md5(docs, text_col).alias("m")
+        ).write.mode(mode).parquet(os.path.join(path, "md5"))
+        banded.withColumnRenamed("_id", id_col).withColumnRenamed(
+            "_n", "n_shingles"
+        ).write.mode(mode).partitionBy("band").parquet(
+            os.path.join(path, "bands")
+        )
 
 
 def _load_meta(index_path: str) -> dict:
-    """Load the index's meta sidecar, refusing a never-built or
-    half-built index with the instructive rebuild message (shared by
+    """The index's meta sidecar, refusing the v1 layout (shared by
     every reader/appender so the error is identical everywhere)."""
-    import json
-    import os
-
-    meta_path = os.path.join(index_path, "meta.json")
-    # Refusing an index without a meta sidecar closes the crashed-
-    # initial-build hole: a later append can never "repair" a
-    # partial index with its own (possibly different) parameters.
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no meta.json at {index_path}: index incomplete or never "
-            "built — rebuild with mode='overwrite' before appending"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
+    meta = indexdir.load_meta(index_path)
     if meta.get("v") != 2:
         raise ValueError(
             f"dedup index at {index_path} uses the v1 layout (distinct "
@@ -1349,80 +1314,15 @@ def _load_meta(index_path: str) -> dict:
     return meta
 
 
-def _begin_index_append(path: str, meta: dict) -> str:
-    """Torn-append + parameter guards shared by :func:`write_dedup_index`
-    (append mode) and :func:`ingest_batch`: refuse a torn or
-    parameter-mismatched index, then drop the ``_pending_append`` marker
-    that the caller removes after BOTH relations have landed. Returns
-    the marker path."""
-    import os
-
-    _check_no_pending_append(path)
+def _check_index_params(path: str, meta: dict) -> None:
+    """Parameter guard shared by :func:`write_dedup_index` (append
+    mode) and :func:`ingest_batch`: an append must match the index's
+    stored parameters exactly."""
     existing = _load_meta(path)
     if existing != meta:
         raise ValueError(
             f"index at {path} was built with {existing}, got {meta}"
         )
-    return _acquire_dedup_marker(path)
-
-
-def _acquire_dedup_marker(index_path: str) -> str:
-    """O_EXCL writer-marker acquisition — the same contract as
-    textindex._acquire_marker and the IVF-PQ marker (advice r11: the
-    check-then-open here was non-atomic, so two concurrent writers
-    could both pass ``_check_no_pending_append`` and interleave
-    commits). The loser fails loudly; returns the marker path."""
-    import os
-
-    pending = os.path.join(index_path, "_pending_append")
-    try:
-        fd = os.open(pending, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ValueError(
-            f"dedup index write collision at {index_path}: another "
-            "writer holds the _pending_append marker (or a previous "
-            "write crashed torn) — the index has one writer at a time; "
-            "if no writer is running, rebuild with mode='overwrite'"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write("append in progress\n")
-    return pending
-
-
-def _dedup_tombstones(spark, index_path: str, meta: dict):
-    """The `_deletes` relation (ids removed by merge-on-read delete),
-    or None. Probes anti-join it out of BOTH index relations."""
-    import os
-
-    dels = os.path.join(index_path, "_deletes")
-    if not os.path.exists(dels):
-        return None
-    return spark.read.parquet(dels).select(meta["id_col"])
-
-
-def _index_md5(spark, index_path: str, meta: dict) -> DataFrame:
-    """The exact-tier fingerprint relation as the probes consume it:
-    id-keyed rows, tombstones dropped, projected to the one-column 'm'
-    shape `_exact_tier` expects (the semi-join makes per-doc vs
-    distinct layouts equivalent)."""
-    import os
-
-    rel = spark.read.parquet(os.path.join(index_path, "md5"))
-    dead = _dedup_tombstones(spark, index_path, meta)
-    if dead is not None:
-        rel = rel.join(F.broadcast(dead), meta["id_col"], "left_anti")
-    return rel.select("m")
-
-
-def _index_bands(spark, index_path: str, meta: dict) -> DataFrame:
-    """The near-tier banding relation, tombstones dropped."""
-    import os
-
-    rel = spark.read.parquet(os.path.join(index_path, "bands"))
-    dead = _dedup_tombstones(spark, index_path, meta)
-    if dead is not None:
-        rel = rel.join(F.broadcast(dead), meta["id_col"], "left_anti")
-    return rel
 
 
 def delete_from_dedup_index(spark, index_path: str, doc_ids) -> dict:
@@ -1440,118 +1340,109 @@ def delete_from_dedup_index(spark, index_path: str, doc_ids) -> dict:
     takedown granularity requires per-copy index rows
     (:func:`write_dedup_index` appends write one md5 row per doc).
     Returns {"deleted": n}."""
-    import os
-
-    meta = _load_meta(index_path)
-    _check_no_pending_append(index_path)
-    id_col = meta["id_col"]
-    pending = _acquire_dedup_marker(index_path)
-    try:
-        ids_df = (
-            doc_ids
-            if isinstance(doc_ids, DataFrame)
-            else _local_ids(spark, doc_ids, id_col)
-        ).select(F.col(id_col).cast("long")).distinct()
-        dels = os.path.join(index_path, "_deletes")
-        if os.path.exists(dels):
-            ids_df = ids_df.join(
-                spark.read.parquet(dels), id_col, "left_anti"
-            )
-        present = ids_df.join(
-            spark.read.parquet(os.path.join(index_path, "md5")).select(
-                id_col
-            ),
-            id_col,
-            "left_semi",
-        )
-        n = present.count()
-        if n:
-            present.write.mode("append").parquet(dels)
-        return {"deleted": n}
-    finally:
-        os.remove(pending)
+    id_col = _load_meta(index_path)["id_col"]
+    ids = indexdir.id_frame(spark, doc_ids, id_col)
+    # a tombstone append alone is harmless when torn: always release
+    with indexdir.writer(index_path, intact=lambda: True):
+        md5 = spark.read.parquet(os.path.join(index_path, "md5"))
+        n = indexdir.add_tombstones(spark, index_path, ids, md5, id_col)
+    return {"deleted": n}
 
 
 def compact_dedup_index(spark, index_path: str) -> dict:
     """Apply tombstones physically and restore ~one file per band
-    partition (appends fragment both relations). Each relation swaps
-    via two renames with rollback; the marker is released only when
-    both directories are intact — the round-11 swap discipline."""
-    import os
-    import shutil
-
-    meta = _load_meta(index_path)
-    _check_no_pending_append(index_path)
-    id_col = meta["id_col"]
-    pending = _acquire_dedup_marker(index_path)
+    partition (appends fragment both relations). Each relation is
+    swapped in with rollback; the marker is released when both
+    directories exist."""
+    id_col = _load_meta(index_path)["id_col"]
     md5_dir = os.path.join(index_path, "md5")
     bands_dir = os.path.join(index_path, "bands")
-    dels = os.path.join(index_path, "_deletes")
-    try:
+    dels = os.path.join(index_path, indexdir.DELETES)
 
-        def nfiles(d):
-            return sum(
-                1
-                for root, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
-        before = nfiles(md5_dir) + nfiles(bands_dir)
-        dead = (
-            spark.read.parquet(dels).select(id_col)
-            if os.path.exists(dels)
-            else None
+    def live(d: str) -> DataFrame:
+        return indexdir.drop_tombstoned(
+            spark, index_path, spark.read.parquet(d), id_col
         )
 
-        def rewrite(src, writer):
-            rel = spark.read.parquet(src)
-            if dead is not None:
-                rel = rel.join(F.broadcast(dead), id_col, "left_anti")
-            tmp = src + ".compact"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            writer(rel, tmp)
-            aside = src + ".old"
-            if os.path.exists(aside):
-                shutil.rmtree(aside)
-            os.rename(src, aside)
-            try:
-                os.rename(tmp, src)
-            except BaseException:
-                os.rename(aside, src)  # roll the first rename back
-                raise
-            shutil.rmtree(aside)
-
-        rewrite(md5_dir, lambda rel, tmp: rel.coalesce(8).write.parquet(tmp))
-        rewrite(
+    with indexdir.writer(
+        index_path,
+        intact=lambda: os.path.isdir(md5_dir) and os.path.isdir(bands_dir),
+    ):
+        before = indexdir.count_parquet(md5_dir) + indexdir.count_parquet(
+            bands_dir
+        )
+        indexdir.replace_dir(md5_dir, live(md5_dir).coalesce(8).write.parquet)
+        indexdir.replace_dir(
             bands_dir,
-            lambda rel, tmp: rel.repartition(F.col("band"))
+            live(bands_dir)
+            .repartition(F.col("band"))
             .write.partitionBy("band")
-            .parquet(tmp),
+            .parquet,
         )
-        if dead is not None:
+        if os.path.exists(dels):
             shutil.rmtree(dels)
         return {
             "files_before": before,
-            "files_after": nfiles(md5_dir) + nfiles(bands_dir),
+            "files_after": indexdir.count_parquet(md5_dir)
+            + indexdir.count_parquet(bands_dir),
         }
-    finally:
-        if os.path.isdir(md5_dir) and os.path.isdir(bands_dir):
-            os.remove(pending)
 
 
-def _check_no_pending_append(index_path: str) -> None:
-    """Refuse an index whose last append never completed — the md5 and
-    bands relations may disagree on which batches they contain."""
-    import os
+def _batch_bands(keyed_new: DataFrame, text_col: str, meta: dict) -> DataFrame:
+    """The batch's banding rows under the index's stored parameters."""
+    sh = _shingle_table(keyed_new, "_k", text_col, meta["k"])
+    sig = minhash_signature(sh, n_hashes=meta["n_hashes"], include_size=True)
+    return _banded(sig, meta["bands"], meta["n_hashes"])
 
-    if os.path.exists(os.path.join(index_path, "_pending_append")):
-        raise ValueError(
-            f"index at {index_path} has a torn append (_pending_append "
-            "marker present): a previous append crashed between the md5 "
-            "and bands writes — rebuild with mode='overwrite'"
-        )
+
+def _probe_index(
+    spark,
+    index_path: str,
+    meta: dict,
+    new: DataFrame,
+    new_md5: DataFrame,
+    banded_new: DataFrame,
+    keyed_new: DataFrame,
+    hist: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The indexed probe shared by :func:`incremental_dedup_indexed`
+    and :func:`ingest_batch`, against the tombstone-filtered index
+    relations: the batch's fingerprints semi-join the stored md5 rows
+    (exact tier; the semi-join makes per-doc vs distinct layouts
+    equivalent), its banding rows join the stored (band, bucket) rows
+    (near tier; both sides namespaced, as in the inline path, so an id
+    value present in both corpora never merges shingle sets),
+    candidates are pinned, and only they are re-shingled and verified.
+    Returns one verdict row per ``new`` doc."""
+
+    def live(name: str) -> DataFrame:
+        rel = spark.read.parquet(os.path.join(index_path, name))
+        return indexdir.drop_tombstoned(spark, index_path, rel, meta["id_col"])
+
+    exact_ids = _exact_tier(new_md5, live("md5").select("m"))
+    left = banded_new.select(
+        F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
+    )
+    right = live("bands").select(
+        F.struct(
+            F.lit(0).alias("_ns"), F.col(meta["id_col"]).alias("_oid")
+        ).alias("id_b"),
+        F.col("n_shingles").alias("_nb"),
+        "band",
+        "bucket",
+    )
+    cand = (
+        left.join(right, ["band", "bucket"])
+        .select("id_a", "id_b", "_na", "_nb")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    keyed_union = keyed_new.unionByName(_ns_keyed(hist, 0, id_col, text_col))
+    near_ids = _scoped_near_ids(cand, keyed_union, text_col, meta["k"], threshold)
+    return _verdicts(new, id_col, exact_ids, near_ids)
 
 
 def incremental_dedup_indexed(
@@ -1576,50 +1467,20 @@ def incremental_dedup_indexed(
     ``hist`` supplies the candidate text lookups; at scale that read is
     pruned to matched ids by parquet predicate pushdown.
     """
-    import os
-
-    _check_no_pending_append(index_path)
+    indexdir.check_unmarked(index_path)
     meta = _load_meta(index_path)
-    k, n_hashes, bands = meta["k"], meta["n_hashes"], meta["bands"]
     dup_members = None
     if collapse_exact:
         # hot-bucket guard: classify one representative per distinct
         # batch text (see incremental_dedup's docstring)
         new, dup_members = _collapse_new_side(new, id_col, text_col)
-    # exact tier against the stored fingerprints
-    hist_md5 = _index_md5(spark, index_path, meta)
-    exact_ids = _exact_tier(new, id_col, text_col, hist_md5)
-    # near tier: batch banding vs stored banding — both sides namespaced
-    # (same discipline as the inline path) so an id value present in
-    # both corpora never merges shingle sets in the verify stage
     keyed_new = _ns_keyed(new, 1, id_col, text_col)
-    sh_new = _shingle_table(keyed_new, "_k", text_col, k)
-    banded_new = _banded(
-        minhash_signature(sh_new, n_hashes=n_hashes, include_size=True),
-        bands,
-        n_hashes,
+    out = _probe_index(
+        spark, index_path, meta, new,
+        _md5_rows(new, id_col, text_col),
+        _batch_bands(keyed_new, text_col, meta),
+        keyed_new, hist, id_col, text_col, threshold,
     )
-    stored = _index_bands(spark, index_path, meta)
-    left = banded_new.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
-    )
-    right = stored.select(
-        F.struct(
-            F.lit(0).alias("_ns"), F.col(meta["id_col"]).alias("_oid")
-        ).alias("id_b"),
-        F.col("n_shingles").alias("_nb"),
-        "band",
-        "bucket",
-    )
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .select("id_a", "id_b", "_na", "_nb")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    keyed_union = keyed_new.unionByName(_ns_keyed(hist, 0, id_col, text_col))
-    near_ids = _scoped_near_ids(cand, keyed_union, text_col, k, threshold)
-    out = _verdicts(new, id_col, exact_ids, near_ids)
     if collapse_exact:
         out = _expand_verdicts(out, dup_members, id_col)
     return out
@@ -1659,8 +1520,8 @@ def ingest_batch(
     the sink (classification re-runs against a pre-append index, so the
     duplicate rows carry the SAME verdicts — dedup by id downstream),
     never to wrong verdicts. The residual torn state — crash between
-    the two index-relation writes — is caught by the ``_pending_append``
-    marker, which makes the next call refuse the index outright.
+    the two index-relation writes — is caught by the writer marker,
+    which makes the next call refuse the index outright.
 
     Index contents after the append differ from the two-call loop in
     one deliberate way: banding rows are written for one REPRESENTATIVE
@@ -1673,84 +1534,50 @@ def ingest_batch(
     history therefore costs O(1) index rows per distinct text instead
     of O(copies) — smaller index AND fewer future candidates.
     """
-    import os
-
-    _check_no_pending_append(index_path)
+    indexdir.check_unmarked(index_path)
     meta = _load_meta(index_path)
     if meta["id_col"] != id_col:
         raise ValueError(
             f"index at {index_path} was built on id_col="
             f"{meta['id_col']!r}, got {id_col!r}"
         )
-    k, n_hashes, bands = meta["k"], meta["n_hashes"], meta["bands"]
     # hot-bucket guard (see incremental_dedup): classify one
     # representative per distinct batch text, expand verdicts after
     new, dup_members = _collapse_new_side(new, id_col, text_col)
     # --- derive the batch's index relations ONCE ----------------------
-    new_md5 = (
-        new.select(
-            F.col(id_col).alias("_id"),
-            fingerprint_md5(new, text_col).alias("m"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    new_md5 = _md5_rows(new, id_col, text_col).localCheckpoint(eager=True)
     keyed_new = _ns_keyed(new, 1, id_col, text_col)
-    sh_new = _shingle_table(keyed_new, "_k", text_col, k)
-    banded_new = _banded(
-        minhash_signature(sh_new, n_hashes=n_hashes, include_size=True),
-        bands,
-        n_hashes,
-    ).localCheckpoint(eager=True)
-    # --- probe (same joins as incremental_dedup_indexed) --------------
-    hist_md5 = _index_md5(spark, index_path, meta)
-    exact_ids = (
-        new_md5.join(hist_md5, "m", "left_semi")
-        .select("_id")
-        .withColumn("_ex", F.lit(1))
+    banded_new = _batch_bands(keyed_new, text_col, meta).localCheckpoint(
+        eager=True
     )
-    stored = _index_bands(spark, index_path, meta)
-    left = banded_new.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "band", "bucket"
-    )
-    right = stored.select(
-        F.struct(
-            F.lit(0).alias("_ns"), F.col(id_col).alias("_oid")
-        ).alias("id_b"),
-        F.col("n_shingles").alias("_nb"),
-        "band",
-        "bucket",
-    )
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .select("id_a", "id_b", "_na", "_nb")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    keyed_union = keyed_new.unionByName(_ns_keyed(hist, 0, id_col, text_col))
-    near_ids = _scoped_near_ids(cand, keyed_union, text_col, k, threshold)
     out = _expand_verdicts(
-        _verdicts(new, id_col, exact_ids, near_ids), dup_members, id_col
+        _probe_index(
+            spark, index_path, meta, new, new_md5, banded_new,
+            keyed_new, hist, id_col, text_col, threshold,
+        ),
+        dup_members,
+        id_col,
     ).localCheckpoint(eager=True)  # pin verdicts BEFORE the append lands
     # Durable-sink hook: under at-least-once replay, verdicts must be
     # OUTSIDE the process before the index mutates (see docstring).
     if verdict_writer is not None:
         verdict_writer(out)
     # --- append the SAME derived relations -----------------------------
-    pending_path = _begin_index_append(index_path, meta)
-    # v2 layout: id-keyed fingerprints (one row per indexed
-    # representative) so merge-on-read deletes can target them
-    new_md5.select(
-        F.col("_id").alias(id_col), "m"
-    ).write.mode("append").parquet(os.path.join(index_path, "md5"))
-    banded_new.select(
-        F.col("_id._oid").alias(id_col),
-        F.col("_n").alias("n_shingles"),
-        "band",
-        "bucket",
-    ).write.mode("append").partitionBy("band").parquet(
-        os.path.join(index_path, "bands")
-    )
-    os.remove(pending_path)
+    _check_index_params(index_path, meta)
+    with indexdir.writer(index_path):
+        # v2 layout: id-keyed fingerprints (one row per indexed
+        # representative) so merge-on-read deletes can target them
+        new_md5.select(
+            F.col("_id").alias(id_col), "m"
+        ).write.mode("append").parquet(os.path.join(index_path, "md5"))
+        banded_new.select(
+            F.col("_id._oid").alias(id_col),
+            F.col("_n").alias("n_shingles"),
+            "band",
+            "bucket",
+        ).write.mode("append").partitionBy("band").parquet(
+            os.path.join(index_path, "bands")
+        )
     return out
 
 
@@ -1759,34 +1586,23 @@ def dedup_index_stats(index_path: str) -> dict:
     (completing the stats trilogy with `text_index_stats` and
     `ivfpq_index_stats`): pure filesystem metadata, no Spark session.
     The torn-state marker is reported, not raised."""
-    import os
-
     meta = _load_meta(index_path)
-
-    def _nparquet(d: str) -> int:
-        return sum(
-            1
-            for _root, _dirs, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
     md5_dir = os.path.join(index_path, "md5")
     bands_dir = os.path.join(index_path, "bands")
-    dels = os.path.join(index_path, "_deletes")
+    dels = os.path.join(index_path, indexdir.DELETES)
     n_bands = int(meta["bands"])
-    files_bands = _nparquet(bands_dir) if os.path.exists(bands_dir) else 0
+    files_bands = indexdir.count_parquet(bands_dir)
     return {
         "k": int(meta["k"]),
         "n_hashes": int(meta["n_hashes"]),
         "bands": n_bands,
-        "files_md5": _nparquet(md5_dir) if os.path.exists(md5_dir) else 0,
+        "files_md5": indexdir.count_parquet(md5_dir),
         "files_bands": files_bands,
         "files_per_band": files_bands / max(n_bands, 1),
         "has_tombstones": os.path.exists(dels),
-        "files_tombstones": _nparquet(dels) if os.path.exists(dels) else 0,
+        "files_tombstones": indexdir.count_parquet(dels),
         "pending_append": os.path.exists(
-            os.path.join(index_path, "_pending_append")
+            os.path.join(index_path, indexdir.MARKER)
         ),
     }
 

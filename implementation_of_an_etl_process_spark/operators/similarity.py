@@ -20,6 +20,9 @@ engine-exact for oracle comparison; throughput users can pass
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -30,6 +33,7 @@ from implementation_of_an_etl_process_spark.functions.vectors import (
     quantize_vec,
 )
 from implementation_of_an_etl_process_spark.plans import spread
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 
 def _pairs_scored(queries_df, corpus_df, exact_scores: bool):
@@ -1298,10 +1302,9 @@ def ivfpq_topk(
 # A 10^9-vector deployment does not re-encode on every ingest — it
 # freezes the coarse centroids + codebooks once (model drift is a
 # re-index event, not an append), encodes each NEW batch with the
-# frozen model, and appends only the touched cell partitions. Same
-# lifecycle discipline as the dedup index (dedup.py::write_dedup_index):
-# meta sidecar pins the model, a _pending_append marker makes torn
-# appends loud instead of silently-partial.
+# frozen model, and appends only the touched cell partitions. The meta
+# sidecar pins the model; writer marker, ledger, tombstones and swaps
+# follow the shared index-directory protocol (sources/indexdir.py).
 
 
 def _ivfpq_meta(codebooks, centroids, residual: bool, corpus_id: str) -> dict:
@@ -1341,122 +1344,53 @@ def write_ivfpq_index(
     encodes a new batch with the index's OWN stored model and adds only
     the touched cell partitions — the steady-state ingest loop; it
     refuses an index built with a different model (codes from
-    mismatched codebooks would silently rank garbage). The
-    ``_pending_append`` marker turns a crash mid-append into a loud
-    read-time error rather than a silently partial index.
+    mismatched codebooks would silently rank garbage).
 
-    ``batch_id`` (append mode) makes retries IDEMPOTENT — the
-    foreachBatch contract: committed ids live in a ``_batches.json``
-    ledger, a re-delivered id is a no-op, and the ledger entry lands
-    INSIDE the ``_pending_append`` window (codes first, then ledger,
-    then marker off), so a crash between codes and ledger is a torn
-    append (loud rebuild), never a silent double-append."""
-    import json
-    import os
+    ``batch_id`` makes retries IDEMPOTENT — the foreachBatch contract:
+    a re-delivered id is a no-op. Builds and appends hold the writer
+    marker and release it only on success, so a crash between meta,
+    codes and ledger is a loud torn-state error (marker, ledger and
+    rebuild rules: :mod:`..sources.indexdir`)."""
+    import numpy as np
 
     meta = _ivfpq_meta(codebooks, centroids, residual, corpus_id)
-    pending_path = os.path.join(path, "_pending_append")
-    ledger_path = os.path.join(path, "_batches.json")
     if mode == "append":
-        existing = _load_ivfpq_meta(path)
-        if existing != meta:
+        if indexdir.load_meta(path) != meta:
             raise ValueError(
                 f"ivfpq index at {path} was built with a different "
                 "model (m/n_codes/residual/codebooks/centroids must "
                 "match exactly) — re-encode with the stored model via "
                 "append_ivfpq_index, or rebuild with mode='overwrite'"
             )
-        if os.path.exists(pending_path):
-            raise ValueError(
-                f"ivfpq index at {path}: _pending_append marker present "
-                "— another writer is active, or a previous append "
-                "crashed (torn). If no writer is running, rebuild with "
-                "mode='overwrite'"
-            )
-        _acquire_ivfpq_marker(pending_path)
-        # ledger check UNDER the marker: checking before acquisition
-        # would let writer B read "batch absent" while writer A of the
-        # same batch_id is mid-commit, then acquire after A releases
-        # and double-append — check-then-write must be atomic
-        if batch_id is not None and os.path.exists(ledger_path):
-            with open(ledger_path) as f:
-                committed_ids = json.load(f)
-            if int(batch_id) in committed_ids:
-                os.remove(pending_path)
-                return  # re-delivered micro-batch: already ingested
     else:
-        os.makedirs(path, exist_ok=True)
-        if os.path.exists(pending_path):
-            os.remove(pending_path)  # fresh overwrite repairs torn state
-        dels = os.path.join(path, "_deletes")
-        if os.path.exists(dels):
-            # a rebuild has no tombstones (stale ones would filter
-            # freshly-encoded rows — the text index's caught bug class)
-            import shutil
-
-            shutil.rmtree(dels)
-        # the marker is held across the WHOLE rebuild (cleared on
-        # success only): a rebuild over an existing index replaces meta
-        # then codes, and a crash in between would otherwise leave new
-        # meta + old codes — reads silently scoring mismatched codes
-        # against the new model. With the marker held, that crash is a
-        # loud torn-state error at read time instead.
-        _acquire_ivfpq_marker(pending_path)
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
-    import numpy as np
-
-    # repartition by cell BEFORE the partitioned write: without it,
-    # every input partition sprays a file into every cell directory
-    # (measured 2,018 files for a 64-cell 2M-vector index vs 33 flat),
-    # and the probe scan's per-file Arrow overhead then DWARFS the ADC
-    # (39.6s vs 4.4s flat — the pruning win inverted). One task per
-    # cell -> one file per cell; at corpus sizes where a single cell
-    # outgrows one file, raise spark.sql.shuffle.partitions and salt
-    # the repartition key.
-    encode_ivfpq(
-        corpus,
-        np.asarray(codebooks, dtype=np.float64),
-        centroids,
-        corpus_id=corpus_id,
-        corpus_vec=corpus_vec,
-        residual=residual,
-    ).repartition(F.col("cell")).write.mode(mode).partitionBy("cell").parquet(
-        os.path.join(path, "codes")
-    )
-    if batch_id is not None:
-        committed = []
-        if mode == "append" and os.path.exists(ledger_path):
-            with open(ledger_path) as f:
-                committed = json.load(f)
-        committed.append(int(batch_id))
-        tmp = ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(committed, f)
-        os.replace(tmp, ledger_path)
-    elif mode != "append" and os.path.exists(ledger_path):
-        os.remove(ledger_path)  # a rebuild resets ingest history
-    os.remove(pending_path)  # success: append and overwrite both release
-
-
-def _local_ids(spark, ids, col: str):
-    from implementation_of_an_etl_process_spark.plans import local_rows_df
-
-    return local_rows_df(spark, [(int(i),) for i in ids], f"{col} long")
-
-
-def _load_ivfpq_meta(path: str) -> dict:
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no meta.json at {path}: ivfpq index incomplete or never "
-            "built — build with write_ivfpq_index(mode='overwrite')"
-        )
-    with open(meta_path) as f:
-        return json.load(f)
+        indexdir.reset(path)
+    with indexdir.writer(path):
+        if batch_id is not None and int(batch_id) in indexdir.committed_batches(
+            path
+        ):
+            return  # re-delivered micro-batch: already ingested
+        if mode != "append":
+            indexdir.write_meta(path, meta)
+        # repartition by cell BEFORE the partitioned write: without it,
+        # every input partition sprays a file into every cell directory
+        # (measured 2,018 files for a 64-cell 2M-vector index vs 33
+        # flat), and the probe scan's per-file Arrow overhead then
+        # DWARFS the ADC (39.6s vs 4.4s flat — the pruning win
+        # inverted). One task per cell -> one file per cell; at corpus
+        # sizes where a single cell outgrows one file, raise
+        # spark.sql.shuffle.partitions and salt the repartition key.
+        encode_ivfpq(
+            corpus,
+            np.asarray(codebooks, dtype=np.float64),
+            centroids,
+            corpus_id=corpus_id,
+            corpus_vec=corpus_vec,
+            residual=residual,
+        ).repartition(F.col("cell")).write.mode(mode).partitionBy(
+            "cell"
+        ).parquet(os.path.join(path, "codes"))
+        if batch_id is not None:
+            indexdir.commit_batch(path, batch_id)
 
 
 def append_ivfpq_index(
@@ -1475,7 +1409,7 @@ def append_ivfpq_index(
     ledger contract) — :func:`streaming.ivfpq_ingest_sink` does."""
     import numpy as np
 
-    meta = _load_ivfpq_meta(path)
+    meta = indexdir.load_meta(path)
     write_ivfpq_index(
         corpus_batch,
         path,
@@ -1493,18 +1427,10 @@ def read_ivfpq_index(spark, path: str):
     """Load (index_df, codebooks, centroids, residual) from ``path``,
     refusing torn-append state. The returned frame is the partitioned
     parquet read — probe filters prune directories."""
-    import os
-
     import numpy as np
 
-    meta = _load_ivfpq_meta(path)
-    if os.path.exists(os.path.join(path, "_pending_append")):
-        raise ValueError(
-            f"ivfpq index at {path}: _pending_append marker present — "
-            "another writer is active, or a previous append crashed "
-            "(torn: the last batch may be partially written). If no "
-            "writer is running, rebuild with mode='overwrite'"
-        )
+    meta = indexdir.load_meta(path)
+    indexdir.check_unmarked(path)
     index = spark.read.parquet(os.path.join(path, "codes"))
     return (
         index,
@@ -1524,50 +1450,13 @@ def delete_from_ivfpq_index(spark, path: str, cids) -> dict:
     compaction drops the rows physically and clears the relation.
     Unknown/already-deleted ids are no-ops.
     Returns {"deleted": n}."""
-    import os
-
-    _load_ivfpq_meta(path)
-    pending = os.path.join(path, "_pending_append")
-    if os.path.exists(pending):
-        raise ValueError(
-            f"ivfpq index at {path}: _pending_append marker present — "
-            "another writer is active, or a previous write crashed"
-        )
-    _acquire_ivfpq_marker(pending)
-    try:
-        ids_df = (
-            cids
-            if isinstance(cids, DataFrame)
-            else _local_ids(spark, cids, "cid")
-        ).select(F.col("cid").cast("long")).distinct()
-        dels = os.path.join(path, "_deletes")
-        if os.path.exists(dels):
-            ids_df = ids_df.join(
-                spark.read.parquet(dels), "cid", "left_anti"
-            )
-        # tombstone only ids the index actually holds (no-op unknowns)
-        present = ids_df.join(
-            spark.read.parquet(os.path.join(path, "codes")).select("cid"),
-            "cid",
-            "left_semi",
-        )
-        n = present.count()
-        if n:
-            present.write.mode("append").parquet(dels)
-        return {"deleted": n}
-    finally:
-        os.remove(pending)
-
-
-def _apply_ivfpq_tombstones(spark, path: str, index: DataFrame) -> DataFrame:
-    import os
-
-    dels = os.path.join(path, "_deletes")
-    if os.path.exists(dels):
-        index = index.join(
-            F.broadcast(spark.read.parquet(dels)), "cid", "left_anti"
-        )
-    return index
+    indexdir.load_meta(path)
+    ids = indexdir.id_frame(spark, cids, "cid")
+    # a tombstone append alone is harmless when torn: always release
+    with indexdir.writer(path, intact=lambda: True):
+        codes = spark.read.parquet(os.path.join(path, "codes"))
+        n = indexdir.add_tombstones(spark, path, ids, codes, "cid")
+    return {"deleted": n}
 
 
 def ivfpq_query_index(
@@ -1602,7 +1491,7 @@ def ivfpq_query_index(
     the qualifying count, results are EXACT among qualifying docs (the
     re-rank uses true vectors)."""
     index, books, cents, residual = read_ivfpq_index(spark, path)
-    index = _apply_ivfpq_tombstones(spark, path, index)
+    index = indexdir.drop_tombstoned(spark, path, index, "cid")
     if allowed_ids is not None:
         # no broadcast hint: the allowed set ranges from a handful of
         # ids to most of the corpus — AQE picks the strategy
@@ -1628,27 +1517,6 @@ def ivfpq_query_index(
     )
 
 
-def _acquire_ivfpq_marker(pending_path: str) -> None:
-    """Create the ``_pending_append`` marker with O_EXCL so two
-    concurrent writers (two streaming queries pointed at one index, an
-    append racing a compaction) can't both think they own the window —
-    the loser fails loudly instead of interleaving parquet commits.
-    Single-writer is still the deployment contract; this makes
-    violating it an error, not corruption."""
-    import os
-
-    try:
-        fd = os.open(pending_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ValueError(
-            f"ivfpq index write collision at {pending_path}: another "
-            "append/compaction holds the _pending_append marker — the "
-            "index has one writer at a time"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write("append in progress\n")
-
-
 def compact_ivfpq_index(spark, path: str) -> dict:
     """Rewrite the codes relation to ONE file per cell partition.
 
@@ -1657,85 +1525,28 @@ def compact_ivfpq_index(spark, path: str) -> dict:
     small-file layout that inverted the probe win before the round-10
     fix (2,018 files -> per-file Arrow overhead dwarfing the ADC;
     BASELINE_NOTES r10). Compaction is the steady-state answer: read,
-    repartition by cell, write aside, swap (two renames: codes->old
-    then tmp->codes; if the second fails the first is rolled back so
-    the old layout is restored in place), and the exclusive
-    ``_pending_append`` marker serializes it against appends — the
-    marker is released only when the codes directory is intact, so an
-    unrecoverable torn swap stays a loud read-time error instead of a
-    raw path-not-found with the data stranded in codes.old.
+    drop tombstoned rows, repartition by cell, write aside and swap in
+    with rollback; the marker is released when the codes directory
+    exists, so an unrecoverable torn swap stays a loud read-time error.
     Returns ``{"files_before": n, "files_after": m}``."""
-    import os
-    import shutil
-
-    _load_ivfpq_meta(path)  # refuses a never-built index
+    indexdir.load_meta(path)  # refuses a never-built index
     codes = os.path.join(path, "codes")
-    pending_path = os.path.join(path, "_pending_append")
-    if os.path.exists(pending_path):
-        raise ValueError(
-            f"ivfpq index at {path}: _pending_append marker present — "
-            "another writer is active, or a previous append crashed "
-            "(torn). If no writer is running, rebuild with "
-            "mode='overwrite'"
+    dels = os.path.join(path, indexdir.DELETES)
+    with indexdir.writer(path, intact=lambda: os.path.exists(codes)):
+        before = indexdir.count_parquet(codes)
+        rel = indexdir.drop_tombstoned(
+            spark, path, spark.read.parquet(codes), "cid"
         )
-    _acquire_ivfpq_marker(pending_path)
-    try:
-
-        def _nfiles(d: str) -> int:
-            return sum(
-                1
-                for root, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
-        before = _nfiles(codes)
-        rel = spark.read.parquet(codes)
-        dels = os.path.join(path, "_deletes")
-        had_deletes = os.path.exists(dels)
-        if had_deletes:
-            # apply merge-on-read tombstones physically
-            rel = rel.join(
-                F.broadcast(spark.read.parquet(dels)), "cid", "left_anti"
-            )
-        tmp = codes + ".compact"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        (
-            rel.repartition(F.col("cell"))
-            .write.partitionBy("cell")
-            .parquet(tmp)
+        indexdir.replace_dir(
+            codes,
+            rel.repartition(F.col("cell")).write.partitionBy("cell").parquet,
         )
-        aside = codes + ".old"
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-        os.rename(codes, aside)
-        try:
-            os.rename(tmp, codes)
-        except BaseException:
-            os.rename(aside, codes)  # roll the first rename back
-            raise
-        shutil.rmtree(aside)
-        if had_deletes:
+        if os.path.exists(dels):
             shutil.rmtree(dels)  # physically applied — clear tombstones
-        return {"files_before": before, "files_after": _nfiles(codes)}
-    finally:
-        # release the marker only if the codes layout is intact (either
-        # untouched, rolled back, or swapped); if even the rollback
-        # failed, leave it so reads hit the loud torn-state guard
-        if os.path.exists(codes):
-            os.remove(pending_path)
-
-
-def _nparquet(d: str) -> int:
-    import os
-
-    return sum(
-        1
-        for _root, _dirs, files in os.walk(d)
-        for f in files
-        if f.endswith(".parquet")
-    )
+        return {
+            "files_before": before,
+            "files_after": indexdir.count_parquet(codes),
+        }
 
 
 def ivfpq_index_stats(path: str, *, include_cells: bool = True) -> dict:
@@ -1748,19 +1559,11 @@ def ivfpq_index_stats(path: str, *, include_cells: bool = True) -> dict:
     one parquet FOOTER per codes file — still metadata-only, but
     O(files) file opens; the compaction poll path doesn't need them
     and passes False). The cell fields are then reported as None."""
-    import json
-    import os
-
-    meta = _load_ivfpq_meta(path)
+    meta = indexdir.load_meta(path)
     codes = os.path.join(path, "codes")
-    dels = os.path.join(path, "_deletes")
-    ledger_path = os.path.join(path, "_batches.json")
-    batches: list[int] = []
-    if os.path.exists(ledger_path):
-        with open(ledger_path) as f:
-            batches = json.load(f)
+    dels = os.path.join(path, indexdir.DELETES)
     n_cells = len(meta["centroids"])
-    files_codes = _nparquet(codes) if os.path.exists(codes) else 0
+    files_codes = indexdir.count_parquet(codes)
     if include_cells:
         cell_rows = _cell_row_counts(codes)
         live_cells = [n for n in cell_rows.values() if n > 0]
@@ -1799,19 +1602,15 @@ def ivfpq_index_stats(path: str, *, include_cells: bool = True) -> dict:
         # compaction applies them.
         **cell_fields,
         "has_tombstones": os.path.exists(dels),
-        "files_tombstones": _nparquet(dels) if os.path.exists(dels) else 0,
-        "committed_batches": len(batches),
-        "pending_append": os.path.exists(
-            os.path.join(path, "_pending_append")
-        ),
+        "files_tombstones": indexdir.count_parquet(dels),
+        "committed_batches": len(indexdir.committed_batches(path)),
+        "pending_append": os.path.exists(os.path.join(path, indexdir.MARKER)),
     }
 
 
 def _cell_row_counts(codes: str) -> dict[int, int]:
     """Physical row count per ``cell=<n>`` partition directory, read
     from parquet footers only — O(files) metadata, safe to poll."""
-    import os
-
     out: dict[int, int] = {}
     if not os.path.isdir(codes):
         return out
@@ -1867,7 +1666,7 @@ def retrain_ivfpq_index(
     this function do what its name says).
     Returns {"skew_before", "skew_after", "n_cells"}."""
     before = ivfpq_index_stats(path)
-    meta = _load_ivfpq_meta(path)
+    meta = indexdir.load_meta(path)
     n_cells = int(n_cells if n_cells is not None else len(meta["centroids"]))
     m = int(m if m is not None else meta["m"])
     n_codes = int(n_codes if n_codes is not None else meta["n_codes"])

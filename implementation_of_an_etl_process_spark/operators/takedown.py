@@ -19,11 +19,10 @@ Design (and why it is NOT a distributed transaction):
   doc_id whose corpus row was already removed would break every
   join-back-to-text consumer, while the reverse (row still present,
   indexes silent) is merely a not-yet-finished takedown.
-- The corpus rewrite uses the same two-rename swap discipline as the
-  index compactions (write aside, codes->old, tmp->codes, rollback on
-  the second rename's failure) under an O_EXCL ``_pending_takedown``
-  marker, so concurrent rewrites collide loudly and a torn swap is
-  recoverable in place.
+- The corpus rewrite uses the index compactions' swap with rollback
+  (:mod:`..sources.indexdir`) under an exclusive ``_pending_takedown``
+  marker beside the corpus, so concurrent rewrites collide loudly and
+  a torn swap is recoverable in place.
 
 At 100 TB: the three index deletes are tombstone APPENDS (cost: the
 id set, not the index — physical removal rides the next compaction);
@@ -36,72 +35,50 @@ plain parquet's honest answer is the swap rewrite.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 __all__ = ["takedown_docs", "verify_takedown"]
 
 
 def _ids_df(spark, doc_ids, id_col: str) -> DataFrame:
-    if isinstance(doc_ids, DataFrame):
-        src = doc_ids
-        col = id_col if id_col in src.columns else src.columns[0]
-        return src.select(F.col(col).cast("long").alias(id_col)).distinct()
-    from implementation_of_an_etl_process_spark.plans import local_rows_df
-
-    return local_rows_df(
-        spark, [(int(i),) for i in doc_ids], f"{id_col} long"
-    ).distinct()
+    """The id set as a distinct ``id_col long`` frame; a DataFrame
+    without ``id_col`` contributes its first column."""
+    if isinstance(doc_ids, DataFrame) and id_col not in doc_ids.columns:
+        doc_ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col))
+    return indexdir.id_frame(spark, doc_ids, id_col)
 
 
 def _rewrite_corpus(spark, path: str, ids: DataFrame, id_col: str) -> int:
     """Swap-rewrite ``path`` without the ids; returns rows removed."""
-    marker = os.path.join(
-        os.path.dirname(path.rstrip("/")) or ".",
-        "_pending_takedown." + os.path.basename(path.rstrip("/")),
-    )
-    try:
-        fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ValueError(
-            f"corpus takedown collision at {path}: another rewrite "
-            f"holds {marker} — takedowns are one writer at a time"
-        ) from None
-    os.close(fd)
-    try:
+    path = path.rstrip("/")
+    # the marker sits beside the corpus; it is released when the corpus
+    # directory exists (untouched, rolled back, or swapped)
+    with indexdir.writer(
+        os.path.dirname(path) or ".",
+        marker="_pending_takedown." + os.path.basename(path),
+        intact=lambda: os.path.exists(path),
+    ):
         rel = spark.read.parquet(path)
         n_hit = int(
             rel.join(F.broadcast(ids), id_col, "left_semi").count()
         )
         if not n_hit:
             return 0
-        tmp = path.rstrip("/") + ".takedown"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        rel.join(F.broadcast(ids), id_col, "left_anti").write.parquet(tmp)
-        aside = path.rstrip("/") + ".old"
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-        os.rename(path, aside)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            os.rename(aside, path)  # roll the first rename back
-            raise
-        shutil.rmtree(aside)
+        indexdir.replace_dir(
+            path,
+            rel.join(F.broadcast(ids), id_col, "left_anti").write.parquet,
+            suffix=".takedown",
+        )
         # the swap replaced every part file under an unchanged path:
         # invalidate this session's cached file listings (Spark's
         # FileStatusCache has no TTL by default), or the next read
         # through a pre-swap relation dies with FILE_NOT_EXIST
         spark.catalog.refreshByPath(path)
         return n_hit
-    finally:
-        # release only if the corpus directory is intact (untouched,
-        # rolled back, or swapped); otherwise leave the loud marker
-        if os.path.exists(path):
-            os.remove(marker)
 
 
 def takedown_docs(
@@ -260,23 +237,17 @@ def verify_takedown(
         "ann_residual": None,
     }
     if text_index is not None:
-        from implementation_of_an_etl_process_spark.operators.textindex import (
-            _apply_tombstones,
-        )
-
-        vis = (
-            _apply_tombstones(
-                spark,
-                text_index,
-                spark.read.parquet(os.path.join(text_index, "postings")),
-            )
-            .select("doc_id")
-        )
+        vis = indexdir.drop_tombstoned(
+            spark,
+            text_index,
+            spark.read.parquet(os.path.join(text_index, "postings")),
+            "doc_id",
+        ).select("doc_id")
         pos = os.path.join(text_index, "positions")
         if os.path.exists(pos):
             vis = vis.unionByName(
-                _apply_tombstones(
-                    spark, text_index, spark.read.parquet(pos)
+                indexdir.drop_tombstoned(
+                    spark, text_index, spark.read.parquet(pos), "doc_id"
                 ).select("doc_id")
             )
         out["text_residual"] = int(
@@ -290,23 +261,21 @@ def verify_takedown(
         )
     if dedup_index is not None:
         from implementation_of_an_etl_process_spark.operators.dedup import (
-            _dedup_tombstones,
             _load_meta as _dedup_load_meta,
         )
 
-        meta = _dedup_load_meta(dedup_index)
-        ded_id = meta["id_col"]
-        vis = (
+        ded_id = _dedup_load_meta(dedup_index)["id_col"]
+        vis = indexdir.drop_tombstoned(
+            spark,
+            dedup_index,
             spark.read.parquet(os.path.join(dedup_index, "md5"))
             .select(ded_id)
             .unionByName(
                 spark.read.parquet(os.path.join(dedup_index, "bands"))
                 .select(ded_id)
-            )
+            ),
+            ded_id,
         )
-        dead = _dedup_tombstones(spark, dedup_index, meta)
-        if dead is not None:
-            vis = vis.join(F.broadcast(dead), ded_id, "left_anti")
         out["dedup_residual"] = int(
             vis.join(
                 F.broadcast(ids.select(F.col(id_col).alias(ded_id))),
@@ -317,16 +286,11 @@ def verify_takedown(
             .count()
         )
     if ann_index is not None:
-        from implementation_of_an_etl_process_spark.operators.similarity import (
-            _apply_ivfpq_tombstones,
-        )
-
-        vis = _apply_ivfpq_tombstones(
+        vis = indexdir.drop_tombstoned(
             spark,
             ann_index,
-            spark.read.parquet(os.path.join(ann_index, "codes")).select(
-                "cid"
-            ),
+            spark.read.parquet(os.path.join(ann_index, "codes")).select("cid"),
+            "cid",
         )
         out["ann_residual"] = int(
             vis.join(

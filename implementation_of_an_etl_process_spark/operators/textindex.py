@@ -13,7 +13,7 @@ Layout at ``path``::
     meta.json                       n_buckets, id_col, n_docs,
                                     total_len, positions
     _batches.json                   committed append batch ids (ledger)
-    _pending_append                 exclusive writer marker (O_EXCL)
+    _pending_append                 exclusive writer marker
     _emptydocs/*.parquet            zero-token doc ids (membership only;
                                     present only when such docs exist —
                                     they count toward N but have no
@@ -30,12 +30,9 @@ avgdl) live in ``meta.json`` and are UPDATED on append; per-term df
 is computed at query time from the pruned postings themselves, so
 idf is always append-fresh — there is no frozen model to go stale.
 
-Lifecycle discipline is identical to the IVF-PQ index (round-11
-crash-safety rules): the ``_pending_append`` marker is held across
-every write INCLUDING rebuilds and released only on success, the
-append ledger is checked UNDER the marker (check-then-write atomic),
-and a crash anywhere in the window is a loud torn-state error at
-read time, never a silently inconsistent meta/postings pair.
+Marker, ledger, tombstones, swaps and crash rules follow the shared
+index-directory protocol (:mod:`..sources.indexdir`); builds, appends
+and deletes release the marker only on success.
 
 At 100 TB: the postings build is one tokenize + groupBy(doc, term)
 shuffle; appends cost the BATCH, not the corpus; queries scan
@@ -46,37 +43,16 @@ formula, so the two paths are row-identical and share one oracle.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from implementation_of_an_etl_process_spark.operators.tfidf import IDF_SCALE
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 _VERSION = 1
-
-
-def _acquire_marker(pending_path: str) -> None:
-    """O_EXCL writer marker — same contract as the ANN index: two
-    concurrent writers can't both own the window; the loser fails
-    loudly instead of interleaving parquet commits."""
-    try:
-        fd = os.open(pending_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise ValueError(
-            f"text index write collision at {pending_path}: another "
-            "append/compaction holds the _pending_append marker — the "
-            "index has one writer at a time"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write("append in progress\n")
-
-
-def _local_ids(spark, ids, col: str):
-    from implementation_of_an_etl_process_spark.plans import local_rows_df
-
-    return local_rows_df(spark, [(int(i),) for i in ids], f"{col} long")
 
 
 def _tokens(text_col: str):
@@ -123,27 +99,6 @@ def _positions(docs: DataFrame, id_col: str, text_col: str, n_buckets: int):
     )
 
 
-def _load_meta(path: str) -> dict:
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"no meta.json at {path}: text index incomplete or never "
-            "built — build with write_text_index(mode='overwrite')"
-        )
-    with open(meta_path) as f:
-        return json.load(f)
-
-
-def _check_marker(path: str) -> None:
-    if os.path.exists(os.path.join(path, "_pending_append")):
-        raise ValueError(
-            f"text index at {path}: _pending_append marker present — "
-            "another writer is active, or a previous write crashed "
-            "(torn). If no writer is running, rebuild with "
-            "mode='overwrite'"
-        )
-
-
 def write_text_index(
     docs: DataFrame,
     path: str,
@@ -162,7 +117,7 @@ def write_text_index(
     partitions and bumps the meta stats — id uniqueness across batches
     is the caller's contract, exactly as with the dedup and ANN
     indexes. ``batch_id`` makes append retries idempotent via the
-    ``_batches.json`` ledger, checked UNDER the O_EXCL marker.
+    ``_batches.json`` ledger, checked UNDER the writer marker.
 
     ``store_positions=True`` additionally materializes the parallel
     ``positions/`` relation (per-(doc,term) position arrays, same
@@ -170,10 +125,8 @@ def write_text_index(
     flag is pinned in meta and appends must match it — appending
     position-less batches to a positional index would silently make
     phrase results corpus-dependent."""
-    pending = os.path.join(path, "_pending_append")
-    ledger_path = os.path.join(path, "_batches.json")
     if mode == "append":
-        meta = _load_meta(path)
+        meta = indexdir.load_meta(path)
         if meta["n_buckets"] != n_buckets or meta["id_col"] != id_col:
             raise ValueError(
                 f"text index at {path} was built with n_buckets="
@@ -186,40 +139,21 @@ def write_text_index(
                 f"{meta.get('positions', False)} — append must match, "
                 "or rebuild with mode='overwrite'"
             )
-        _check_marker(path)
-        _acquire_marker(pending)
-        if batch_id is not None and os.path.exists(ledger_path):
-            with open(ledger_path) as f:
-                if int(batch_id) in json.load(f):
-                    os.remove(pending)
-                    return  # re-delivered micro-batch: already ingested
     else:
-        os.makedirs(path, exist_ok=True)
-        if os.path.exists(pending):
-            os.remove(pending)  # fresh overwrite repairs torn state
-        dels = os.path.join(path, "_deletes")
-        if os.path.exists(dels):
-            # a rebuild has no tombstones: leaving them would filter
-            # freshly-written postings AND desync the meta stats (the
-            # delete path skips already-tombstoned ids, so it would
-            # never re-adjust them)
-            import shutil
-
-            shutil.rmtree(dels)
-        empties = os.path.join(path, "_emptydocs")
-        if os.path.exists(empties):
-            import shutil
-
-            shutil.rmtree(empties)  # rebuild resets empty-doc membership
-        pos_dir = os.path.join(path, "positions")
-        if not store_positions and os.path.exists(pos_dir):
-            import shutil
-
-            # rebuilding WITHOUT positions over a positional index:
-            # a stale positions relation would answer phrase queries
+        # a rebuild has no tombstones: leaving them would filter
+        # freshly-written postings AND desync the meta stats (the
+        # delete path skips already-tombstoned ids, so it would never
+        # re-adjust them)
+        indexdir.reset(path)
+        own = ["_emptydocs"]  # rebuild resets empty-doc membership
+        if not store_positions:
+            # rebuilding WITHOUT positions over a positional index: a
+            # stale positions relation would answer phrase queries
             # against the previous corpus
-            shutil.rmtree(pos_dir)
-        _acquire_marker(pending)
+            own.append("positions")
+        for name in own:
+            if os.path.exists(os.path.join(path, name)):
+                shutil.rmtree(os.path.join(path, name))
         meta = {
             "version": _VERSION,
             "n_buckets": n_buckets,
@@ -228,69 +162,54 @@ def write_text_index(
             "total_len": 0,
             "positions": bool(store_positions),
         }
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.size(_tokens(text_col))), F.lit(0))
-        .cast("long")
-        .alias("tl"),
-        F.coalesce(
-            F.sum(F.when(F.size(_tokens(text_col)) == 0, 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_empty"),
-    ).first()
-    if int(stats["n_empty"]):
-        # zero-token docs count toward N (BM25's idf denominator) but
-        # leave no postings rows — record their membership so deletes
-        # can decrement N for them (advice r11: posting-less ids were
-        # invisible to the delete path's contribution aggregate)
-        (
-            docs.filter(F.size(_tokens(text_col)) == 0)
-            .select(F.col(id_col).alias("doc_id"))
-            .write.mode("append")
-            .parquet(os.path.join(path, "_emptydocs"))
-        )
-    # term-sorted within each bucket partition (guide §6: sort order on
-    # write makes min/max row-group statistics effective): query-time
-    # term predicates — bm25's isin and the phrase kernel's list-path
-    # pushdown — then skip whole row groups instead of decoding every
-    # posting in the probed bucket. Sort cost is paid once at
-    # build/append (untimed setup in the bench, amortized across every
-    # query of the index's lifetime).
-    (
-        _postings(docs, id_col, text_col, n_buckets)
-        .repartition(F.col("bucket"))
-        .sortWithinPartitions("bucket", "term")
-        .write.mode(mode)
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    if store_positions:
-        (
-            _positions(docs, id_col, text_col, n_buckets)
-            .repartition(F.col("bucket"))
-            .sortWithinPartitions("bucket", "term")
-            .write.mode(mode)
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "positions"))
-        )
-    meta["n_docs"] = int(meta["n_docs"]) + int(stats["n"])
-    meta["total_len"] = int(meta["total_len"]) + int(stats["tl"])
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "meta.json"))
-    if batch_id is not None:
-        committed = []
-        if mode == "append" and os.path.exists(ledger_path):
-            with open(ledger_path) as f:
-                committed = json.load(f)
-        committed.append(int(batch_id))
-        with open(ledger_path + ".tmp", "w") as f:
-            json.dump(committed, f)
-        os.replace(ledger_path + ".tmp", ledger_path)
-    elif mode != "append" and os.path.exists(ledger_path):
-        os.remove(ledger_path)  # a rebuild resets ingest history
-    os.remove(pending)  # success: both modes release
+    with indexdir.writer(path):
+        if batch_id is not None and int(batch_id) in indexdir.committed_batches(
+            path
+        ):
+            return  # re-delivered micro-batch: already ingested
+        stats = docs.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.size(_tokens(text_col))), F.lit(0))
+            .cast("long")
+            .alias("tl"),
+            F.coalesce(
+                F.sum(F.when(F.size(_tokens(text_col)) == 0, 1).otherwise(0)),
+                F.lit(0),
+            ).alias("n_empty"),
+        ).first()
+        if int(stats["n_empty"]):
+            # zero-token docs count toward N (BM25's idf denominator)
+            # but leave no postings rows — record their membership so
+            # deletes can decrement N for them
+            (
+                docs.filter(F.size(_tokens(text_col)) == 0)
+                .select(F.col(id_col).alias("doc_id"))
+                .write.mode("append")
+                .parquet(os.path.join(path, "_emptydocs"))
+            )
+        # term-sorted within each bucket partition (guide §6: sort order
+        # on write makes min/max row-group statistics effective):
+        # query-time term predicates — bm25's isin and the phrase
+        # kernel's list-path pushdown — then skip whole row groups
+        # instead of decoding every posting in the probed bucket. Sort
+        # cost is paid once at build/append.
+        rels = [("postings", _postings)]
+        if store_positions:
+            rels.append(("positions", _positions))
+        for name, build in rels:
+            (
+                build(docs, id_col, text_col, n_buckets)
+                .repartition(F.col("bucket"))
+                .sortWithinPartitions("bucket", "term")
+                .write.mode(mode)
+                .partitionBy("bucket")
+                .parquet(os.path.join(path, name))
+            )
+        meta["n_docs"] = int(meta["n_docs"]) + int(stats["n"])
+        meta["total_len"] = int(meta["total_len"]) + int(stats["tl"])
+        indexdir.write_meta(path, meta)
+        if batch_id is not None:
+            indexdir.commit_batch(path, batch_id)
 
 
 def append_text_index(
@@ -302,7 +221,7 @@ def append_text_index(
 ) -> None:
     """Append a micro-batch using the index's OWN stored parameters —
     the ingest-loop entry point (no way to pass a mismatched layout)."""
-    meta = _load_meta(path)
+    meta = indexdir.load_meta(path)
     write_text_index(
         batch,
         path,
@@ -332,8 +251,8 @@ def bm25_query_index(
     inline scorer on the same corpus."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    meta = _load_meta(path)
-    _check_marker(path)
+    meta = indexdir.load_meta(path)
+    indexdir.check_unmarked(path)
     terms = sorted({t.lower() for t in query_terms})
     n_buckets = meta["n_buckets"]
     buckets = _term_buckets(spark, terms, n_buckets)
@@ -346,7 +265,7 @@ def bm25_query_index(
             F.col("dlen").cast("long").alias("_len"),
         )
     )
-    tf = _apply_tombstones(spark, path, tf)  # merge-on-read deletes
+    tf = indexdir.drop_tombstoned(spark, path, tf, "doc_id")  # MoR deletes
     n_docs, total_len = int(meta["n_docs"]), int(meta["total_len"])
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     # explicit long literals: F.lit() of a Python int that fits in 32
@@ -482,8 +401,8 @@ def multi_phrase_query_index(
     an absolute doc count. None (default) screens nothing — the
     documented override for exhaustive phrase matching."""
     _validate_max_term_df(max_term_df)
-    meta = _load_meta(path)
-    _check_marker(path)
+    meta = indexdir.load_meta(path)
+    indexdir.check_unmarked(path)
     if not meta.get("positions", False):
         raise ValueError(
             f"text index at {path} was built without positions — "
@@ -592,8 +511,8 @@ def multi_phrase_query_index_df(
     so the default never silently changes a result a caller was
     watching."""
     _validate_max_term_df(max_term_df)
-    meta = _load_meta(path)
-    _check_marker(path)
+    meta = indexdir.load_meta(path)
+    indexdir.check_unmarked(path)
     if not meta.get("positions", False):
         raise ValueError(
             f"text index at {path} was built without positions — "
@@ -704,7 +623,7 @@ def _phrase_match_kernel(
         # DataFrame path's probe set never touches the driver, so it
         # keeps bucket-level pruning only.
         rel = rel.filter(F.col("term").isin(list(probe_terms)))
-    rel = _apply_tombstones(spark, path, rel)  # merge-on-read deletes
+    rel = indexdir.drop_tombstoned(spark, path, rel, "doc_id")  # MoR deletes
     _validate_max_term_df(max_term_df)
     if max_term_df is not None:
         # stopword-probe guard: drop probe phrases whose terms are so
@@ -723,7 +642,7 @@ def _phrase_match_kernel(
         n_live = (
             int(n_live_docs)
             if n_live_docs is not None
-            else int(_load_meta(path)["n_docs"])
+            else int(indexdir.load_meta(path)["n_docs"])
         )
         if isinstance(max_term_df, float) and max_term_df <= 1.0:
             cutoff = int(max_term_df * n_live)
@@ -947,68 +866,48 @@ def delete_from_text_index(spark, path: str, doc_ids) -> dict:
     postings physically and clears the relation. Unknown ids are
     no-ops. Returns {"deleted_docs": n, "deleted_tokens": t}.
 
-    Crash discipline matches write_text_index: the marker is released
-    ONLY on success — a failure between the tombstone append and the
-    meta adjustment leaves the marker in place so every subsequent
-    read/write hits the loud torn-state guard instead of scoring
-    against tombstone-filtered postings with stale N/avgdl."""
-    meta = _load_meta(path)
-    _check_marker(path)
-    pending = os.path.join(path, "_pending_append")
-    _acquire_marker(pending)
-    ids_df = (
-        doc_ids
-        if isinstance(doc_ids, DataFrame)
-        else _local_ids(spark, doc_ids, "doc_id")
-    ).select(F.col("doc_id").cast("long")).distinct()
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    dels = os.path.join(path, "_deletes")
-    if os.path.exists(dels):
+    The marker is released only on success (see
+    :mod:`..sources.indexdir`): a failure between the tombstone append
+    and the meta adjustment must not score tombstone-filtered postings
+    with stale N/avgdl."""
+    meta = indexdir.load_meta(path)
+    ids = indexdir.id_frame(spark, doc_ids, "doc_id")
+    with indexdir.writer(path):
+        postings = spark.read.parquet(os.path.join(path, "postings"))
         # ignore ids already tombstoned (stats were adjusted then)
-        ids_df = ids_df.join(
-            spark.read.parquet(dels), "doc_id", "left_anti"
+        ids = indexdir.drop_tombstoned(spark, path, ids, "doc_id")
+        # exact contributions of the docs being removed: one row per
+        # (doc, term) carries dlen, so per-doc length = first(dlen)
+        hit = (
+            postings.join(F.broadcast(ids), "doc_id", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.first("dlen").alias("dlen"))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("dlen"), F.lit(0)).alias("tl"),
+            )
+            .first()
         )
-    # exact contributions of the docs being removed: one row per
-    # (doc, term) carries dlen, so per-doc length = first(dlen)
-    hit = (
-        postings.join(F.broadcast(ids_df), "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.first("dlen").alias("dlen"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dlen"), F.lit(0)).alias("tl"),
-        )
-        .first()
-    )
-    n_del, tl_del = int(hit["n"]), int(hit["tl"])
-    # posting-less members (zero-token docs) still count toward N:
-    # they were added to n_docs at build/append time via the
-    # _emptydocs relation, so deleting one must decrement N too —
-    # otherwise post-delete scores diverge from a rebuilt index
-    n_empty_del = _drop_empty_docs(spark, path, ids_df)
-    if n_del:
-        ids_df.join(
-            postings.select("doc_id").distinct(), "doc_id", "left_semi"
-        ).write.mode("append").parquet(dels)
-    if n_del or n_empty_del:
-        meta["n_docs"] = int(meta["n_docs"]) - n_del - n_empty_del
-        meta["total_len"] = int(meta["total_len"]) - tl_del
-        tmp = os.path.join(path, "meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, os.path.join(path, "meta.json"))
-    os.remove(pending)  # success only — a crash above leaves the guard
+        n_del, tl_del = int(hit["n"]), int(hit["tl"])
+        # posting-less members (zero-token docs) still count toward N:
+        # they were added to n_docs at build/append time via the
+        # _emptydocs relation, so deleting one must decrement N too —
+        # otherwise post-delete scores diverge from a rebuilt index
+        n_empty_del = _drop_empty_docs(spark, path, ids)
+        if n_del:
+            indexdir.add_tombstones(spark, path, ids, postings, "doc_id")
+        if n_del or n_empty_del:
+            meta["n_docs"] = int(meta["n_docs"]) - n_del - n_empty_del
+            meta["total_len"] = int(meta["total_len"]) - tl_del
+            indexdir.write_meta(path, meta)
     return {"deleted_docs": n_del + n_empty_del, "deleted_tokens": tl_del}
 
 
 def _drop_empty_docs(spark, path: str, ids_df: DataFrame) -> int:
     """Remove deleted ids from the ``_emptydocs`` membership relation
     (tiny: zero-token docs only) and return how many were dropped.
-    Survivors are swapped in with the two-rename discipline; a fully
-    emptied relation removes the directory (an empty parquet dir is
-    unreadable)."""
-    import shutil
-
+    Survivors are swapped in; a fully emptied relation removes the
+    directory (an empty parquet dir is unreadable)."""
     empties = os.path.join(path, "_emptydocs")
     if not os.path.exists(empties):
         return 0
@@ -1019,31 +918,9 @@ def _drop_empty_docs(spark, path: str, ids_df: DataFrame) -> int:
     survivors = rel.join(F.broadcast(ids_df), "doc_id", "left_anti")
     if survivors.isEmpty():
         shutil.rmtree(empties)
-        return int(hit)
-    tmp = empties + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    survivors.write.parquet(tmp)
-    aside = empties + ".old"
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
-    os.rename(empties, aside)
-    try:
-        os.rename(tmp, empties)
-    except BaseException:
-        os.rename(aside, empties)
-        raise
-    shutil.rmtree(aside)
+    else:
+        indexdir.replace_dir(empties, survivors.write.parquet, suffix=".tmp")
     return int(hit)
-
-
-def _apply_tombstones(spark, path: str, tf: DataFrame) -> DataFrame:
-    dels = os.path.join(path, "_deletes")
-    if os.path.exists(dels):
-        tf = tf.join(
-            F.broadcast(spark.read.parquet(dels)), "doc_id", "left_anti"
-        )
-    return tf
 
 
 def compact_text_index(spark, path: str) -> dict:
@@ -1052,73 +929,35 @@ def compact_text_index(spark, path: str) -> dict:
     small-file layout that taxes every query (the ANN index's measured
     regime). Tombstoned postings (merge-on-read deletes) are dropped
     PHYSICALLY here and the ``_deletes`` relation cleared — query
-    results are identical before and after by construction. Two
-    renames with rollback, marker released only with the postings
-    directory intact — the round-11 swap discipline."""
-    import shutil
-
-    _load_meta(path)
+    results are identical before and after by construction. Each
+    relation is swapped in with rollback; the marker is released when
+    the postings directory exists."""
+    indexdir.load_meta(path)
     postings = os.path.join(path, "postings")
     pos_dir = os.path.join(path, "positions")
-    pending = os.path.join(path, "_pending_append")
-    dels = os.path.join(path, "_deletes")
-    _check_marker(path)
-    _acquire_marker(pending)
-    try:
-
-        def _nfiles(d: str) -> int:
-            return sum(
-                1
-                for root, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
-
-        had_deletes = os.path.exists(dels)
+    dels = os.path.join(path, indexdir.DELETES)
+    with indexdir.writer(path, intact=lambda: os.path.exists(postings)):
         dirs = [postings] + ([pos_dir] if os.path.exists(pos_dir) else [])
-        before = sum(_nfiles(d) for d in dirs)
-
-        def _rewrite(src: str) -> None:
-            rel = spark.read.parquet(src)
-            if had_deletes:
-                rel = rel.join(
-                    F.broadcast(spark.read.parquet(dels)),
-                    "doc_id",
-                    "left_anti",
-                )
-            tmp = src + ".compact"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            (
+        before = sum(indexdir.count_parquet(d) for d in dirs)
+        for d in dirs:
+            rel = indexdir.drop_tombstoned(
+                spark, path, spark.read.parquet(d), "doc_id"
+            )
+            indexdir.replace_dir(
+                d,
                 rel.repartition(F.col("bucket"))
                 # keep the build-time term-sorted layout (row-group
                 # stats pruning) through compaction
                 .sortWithinPartitions("bucket", "term")
                 .write.partitionBy("bucket")
-                .parquet(tmp)
+                .parquet,
             )
-            aside = src + ".old"
-            if os.path.exists(aside):
-                shutil.rmtree(aside)
-            os.rename(src, aside)
-            try:
-                os.rename(tmp, src)
-            except BaseException:
-                os.rename(aside, src)  # roll the first rename back
-                raise
-            shutil.rmtree(aside)
-
-        for d in dirs:
-            _rewrite(d)
-        if had_deletes:
+        if os.path.exists(dels):
             shutil.rmtree(dels)  # physically applied — clear tombstones
         return {
             "files_before": before,
-            "files_after": sum(_nfiles(d) for d in dirs),
+            "files_after": sum(indexdir.count_parquet(d) for d in dirs),
         }
-    finally:
-        if os.path.exists(postings):
-            os.remove(pending)
 
 
 def text_index_stats(path: str) -> dict:
@@ -1128,40 +967,24 @@ def text_index_stats(path: str) -> dict:
     read, safe to poll at any frequency. Reports the torn-state marker
     instead of raising so an operator dashboard can SEE a wedged
     index."""
-    meta = _load_meta(path)
-
-    def _nfiles(d: str) -> int:
-        return sum(
-            1
-            for _root, _dirs, files in os.walk(d)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    postings = os.path.join(path, "postings")
-    pos_dir = os.path.join(path, "positions")
-    dels = os.path.join(path, "_deletes")
-    ledger_path = os.path.join(path, "_batches.json")
-    batches: list[int] = []
-    if os.path.exists(ledger_path):
-        with open(ledger_path) as f:
-            batches = json.load(f)
+    meta = indexdir.load_meta(path)
     n_buckets = int(meta["n_buckets"])
-    files_postings = _nfiles(postings)
+    files_postings = indexdir.count_parquet(os.path.join(path, "postings"))
+    dels = os.path.join(path, indexdir.DELETES)
     return {
         "n_docs": int(meta["n_docs"]),
         "total_len": int(meta["total_len"]),
         "n_buckets": n_buckets,
         "positions": bool(meta.get("positions", False)),
         "files_postings": files_postings,
-        "files_positions": _nfiles(pos_dir) if os.path.exists(pos_dir) else 0,
+        "files_positions": indexdir.count_parquet(
+            os.path.join(path, "positions")
+        ),
         "files_per_bucket": files_postings / max(n_buckets, 1),
         "has_tombstones": os.path.exists(dels),
-        "files_tombstones": _nfiles(dels) if os.path.exists(dels) else 0,
-        "committed_batches": len(batches),
-        "pending_append": os.path.exists(
-            os.path.join(path, "_pending_append")
-        ),
+        "files_tombstones": indexdir.count_parquet(dels),
+        "committed_batches": len(indexdir.committed_batches(path)),
+        "pending_append": os.path.exists(os.path.join(path, indexdir.MARKER)),
     }
 
 

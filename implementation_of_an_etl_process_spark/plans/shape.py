@@ -10,7 +10,6 @@ on small inputs it buys linear speedup for explode/score-heavy stages
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame
@@ -20,9 +19,7 @@ from pyspark.sql import functions as F
 # compressed) size. Deliberately conservative: the in-memory hash
 # relation runs several times the parquet bytes, and a forced hint
 # overrides AQE — past this size we'd rather let runtime stats decide.
-BROADCAST_LIMIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_LIMIT", str(128 << 20))
-)
+BROADCAST_LIMIT_BYTES = 128 << 20
 
 
 # A Range leaf under one of these numbers the map's work (splits,

@@ -250,7 +250,7 @@ BM25_INDEX_SQL = _bm25_index_oracle()
 def bm25_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted text-index INGEST-LOOP gate: base write + append +
     a RETRIED append of the same batch_id (must no-op via the
-    `_batches.json` ledger, checked under the O_EXCL marker), then the
+    `_batches.json` ledger, checked under the writer marker), then the
     query — which must be row-identical to the one-shot index of the
     full corpus, because df/idf are computed append-fresh from the
     postings and N/avgdl accumulate exactly in meta. The oracle is the
@@ -276,7 +276,7 @@ def bm25_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     TI.append_text_index(batch, idx, batch_id=0)  # re-delivery: no-op
     retry_noop = int(spark.read.parquet(postings).count() == n_after)
     meta_ok = int(
-        TI._load_meta(idx)["n_docs"] == docs.count()
+        TI.text_index_stats(idx)["n_docs"] == docs.count()
     )
     return TI.bm25_query_index(
         spark, idx, list(_BM25_IDX_QUERY), k=_BM25_IDX_K

@@ -181,13 +181,11 @@ def get_spark(
         # --- Quieter local runs ------------------------------------------
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-    )
-    # Arrow transfer batch: 128Ki rows per batch (default 10k). Python
-    # sources/UDFs stream millions of narrow rows; bigger batches cut
-    # per-batch IPC/pickling overhead ~10x with negligible memory cost.
-    builder = builder.config(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        os.environ.get("SPARK_GRAFT_ARROW_BATCH", "131072"),
+        # Arrow transfer batch: 128Ki rows per batch (default 10k).
+        # Python sources/UDFs stream millions of narrow rows; bigger
+        # batches cut per-batch IPC/pickling overhead ~10x with
+        # negligible memory cost.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
     )
     # Local mode: single JVM, driver memory is the only pool, so it is
     # sized from the host rather than fixed.

@@ -14,6 +14,7 @@ sources. Tests drive them with a file source + ``availableNow``.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from typing import Any
 
@@ -21,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -300,6 +303,49 @@ def attribution_join(
 # --- incremental cube maintenance -----------------------------------------
 
 
+def merge_cube_batch(
+    batch: DataFrame,
+    state_dir: str,
+    *,
+    dims: list[str],
+    measure_sums: list[str],
+    key_cols: list[str] | None = None,
+) -> None:
+    """Upsert one micro-batch of update-mode rows into the parquet cube
+    state at ``state_dir``. Exposed as a standalone function so replay
+    can be driven directly in tests; :func:`incremental_cube_sink`'s
+    foreachBatch delegates here.
+
+    Update-mode rows carry the CURRENT cumulative value per the
+    STREAM's grouping key, so the only sound merge is an upsert at that
+    full key granularity — rolling up to ``dims`` first would replace a
+    dims-row with a sum over just the finer keys present in THIS batch,
+    dropping prior contributions. Default key = every non-measure
+    column of the batch; streams that also emit derived NON-key metrics
+    (an avg, a last-updated ts) must pass ``key_cols`` explicitly, else
+    each metric change would look like a brand-new key and duplicate
+    state rows.
+
+    The new state is written beside the old and swapped in with
+    rollback (``sources.indexdir.replace_dir``): a failed swap leaves
+    the previous state in place, never only in ``.old`` where the next
+    batch would not find it.
+    """
+    keys = key_cols or [c for c in batch.columns if c not in set(measure_sums)]
+    missing = set(dims) - set(keys)
+    if missing:
+        raise ValueError(
+            f"incremental_cube_sink: dims {sorted(missing)} absent from "
+            f"stream key columns {keys}; the stream must group by "
+            "(at least) the cube dims"
+        )
+    new = batch.select(*keys, *measure_sums)
+    if os.path.exists(state_dir):
+        old = batch.sparkSession.read.parquet(state_dir)
+        new = old.join(new, keys, "left_anti").unionByName(new)
+    indexdir.replace_dir(state_dir, new.write.parquet, suffix=".tmp")
+
+
 def incremental_cube_sink(
     cube_stream: DataFrame,
     state_dir: str,
@@ -315,61 +361,25 @@ def incremental_cube_sink(
     parquet-backed cube state at the stream's own key granularity
     (``dims`` must be a subset of that key; extra stream-key columns —
     e.g. a window_end that rides along with window_start — are kept, so
-    any dims-level view is an exact rollup of current values).
+    any dims-level view is an exact rollup of current values). See
+    :func:`merge_cube_batch`.
 
     Plain parquet overwrite keeps this dependency-free; on a real
     deployment the body becomes a Delta/Iceberg MERGE INTO keyed on the
     stream key (idempotent under retries) — the plan shape is identical.
     """
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        import os
-
-        # Update-mode rows carry the CURRENT cumulative value per the
-        # STREAM's grouping key, so the only sound merge is an upsert at
-        # that full key granularity — rolling up to ``dims`` first would
-        # replace a dims-row with a sum over just the finer keys present
-        # in THIS batch, dropping prior contributions. Default key =
-        # every non-measure column of the batch; streams that also emit
-        # derived NON-key metrics (an avg, a last-updated ts) must pass
-        # ``key_cols`` explicitly, else each metric change would look
-        # like a brand-new key and duplicate state rows.
-        keys = key_cols or [
-            c for c in batch.columns if c not in set(measure_sums)
-        ]
-        missing = set(dims) - set(keys)
-        if missing:
-            raise ValueError(
-                f"incremental_cube_sink: dims {sorted(missing)} absent from "
-                f"stream key columns {keys}; the stream must group by "
-                "(at least) the cube dims"
-            )
-        new = batch.select(*keys, *measure_sums)
-        if os.path.exists(state_dir):
-            old = spark.read.parquet(state_dir)
-            new = old.join(new, keys, "left_anti").unionByName(new)
-        # write-then-swap to stay readable mid-update
-        tmp = state_dir + ".tmp"
-        new.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        # rename-aside then rename-in shrinks the no-state crash window
-        # to a single metadata op (rmtree of the LIVE dir had a window
-        # where readers found nothing at all)
-        aside = state_dir + ".old"
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-        if os.path.exists(state_dir):
-            os.rename(state_dir, aside)
-        os.rename(tmp, state_dir)
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-
     writer = (
         cube_stream.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge)
+        .foreachBatch(
+            lambda batch, _batch_id: merge_cube_batch(
+                batch,
+                state_dir,
+                dims=dims,
+                measure_sums=measure_sums,
+                key_cols=key_cols,
+            )
+        )
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

@@ -266,6 +266,45 @@ def test_torn_append_refused(spark, tmp_path):
     assert [r.verdict for r in out.collect()] == ["exact"]
 
 
+def test_rebuild_crash_is_loud(spark, tmp_path, monkeypatch):
+    """A rebuild that fails after the md5 write holds the writer
+    marker, so classification refuses the index instead of matching
+    new fingerprints against the old banding rows; a clean rebuild
+    repairs it."""
+    import os
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from implementation_of_an_etl_process_spark.operators.dedup import (
+        incremental_dedup_indexed,
+        write_dedup_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    old = spark.createDataFrame([(1, BASE)], ["doc_id", "text"])
+    write_dedup_index(old, idx, "doc_id", "text")
+    other = spark.createDataFrame(
+        [(2, "one two three four five six seven eight nine ten")],
+        ["doc_id", "text"],
+    )
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash before the bands write")
+
+    # the bands relation is the only partitioned write: md5 lands first
+    monkeypatch.setattr(DataFrameWriter, "partitionBy", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write_dedup_index(other, idx, "doc_id", "text")
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(idx, "_pending_append"))
+    with pytest.raises(ValueError, match="torn append"):
+        incremental_dedup_indexed(spark, idx, other, other, "doc_id", "text")
+    write_dedup_index(other, idx, "doc_id", "text")  # repair
+    out = incremental_dedup_indexed(spark, idx, other, other, "doc_id", "text")
+    assert [r.verdict for r in out.collect()] == ["exact"]
+
+
 def test_ingest_batch_matches_two_call_loop(spark, tmp_path):
     """The fused classify-and-append (:func:`ingest_batch`, one shared
     signature pass) must give the SAME verdicts per batch as the

@@ -15,6 +15,7 @@ from implementation_of_an_etl_process_spark.functions.text_exprs import (
     HASH_MOD,
     rolling_hash,
 )
+from implementation_of_an_etl_process_spark.sources import indexdir
 
 _slow = settings(
     max_examples=12,
@@ -613,7 +614,7 @@ def test_compaction_equals_rebuild_all_three_indexes(
         got = rows(spark.read.parquet(f"{live}/{rel}"))
         want = rows(spark.read.parquet(f"{fresh}/{rel}"))
         assert got == want, f"text {rel} diverged (seed={seed})"
-    ml, mf = TI._load_meta(live), TI._load_meta(fresh)
+    ml, mf = indexdir.load_meta(live), indexdir.load_meta(fresh)
     assert (ml["n_docs"], ml["total_len"]) == (mf["n_docs"], mf["total_len"])
 
     # ---- dedup index (md5 + bands) ----

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from implementation_of_an_etl_process_spark.operators import similarity as S
+from implementation_of_an_etl_process_spark.sources import indexdir
 from tests.conftest import SF_SMOKE
 
 
@@ -551,9 +552,9 @@ def test_ivfpq_compaction_restores_layout_and_results(spark, tmp_path):
         S.compact_ivfpq_index(spark, path)
     marker.unlink()
     # ...and the O_EXCL acquire turns a write race into a loud error
-    S._acquire_ivfpq_marker(str(marker))
+    indexdir.acquire_marker(str(marker))
     with pytest.raises(ValueError, match="write collision"):
-        S._acquire_ivfpq_marker(str(marker))
+        indexdir.acquire_marker(str(marker))
     marker.unlink()
 
 

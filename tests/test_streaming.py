@@ -13,6 +13,7 @@ from implementation_of_an_etl_process_spark import streaming as S
 from implementation_of_an_etl_process_spark.queries.relational import (
     normalize_event_ts,
 )
+from implementation_of_an_etl_process_spark.sources import indexdir
 from tests.conftest import SF_SMOKE
 
 
@@ -161,6 +162,39 @@ def test_incremental_cube_sink(spark, events_dir, tmp_path):
     )
     assert final.agg(F.sum("n_events")).first()[0] == 1000
     assert final.count() == batch.count()
+
+
+def test_cube_state_swap_rolls_back(spark, tmp_path, monkeypatch):
+    """A failed swap of the cube state rolls the first rename back: the
+    earlier state stays in place, so the replayed batch merges into it
+    and no earlier key is lost."""
+    from implementation_of_an_etl_process_spark.streaming.events import (
+        merge_cube_batch,
+    )
+
+    state = str(tmp_path / "cube_state")
+    kw = dict(dims=["k"], measure_sums=["n"])
+    schema = "k string, n long"
+    merge_cube_batch(
+        spark.createDataFrame([("a", 1), ("b", 2)], schema), state, **kw
+    )
+    batch2 = spark.createDataFrame([("b", 5), ("c", 3)], schema)
+    real_rename = os.rename
+    failed = []
+
+    def flaky(src, dst):
+        if os.path.abspath(dst) == os.path.abspath(state) and not failed:
+            failed.append(1)
+            raise OSError("simulated torn swap")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", flaky)
+    with pytest.raises(OSError, match="simulated torn swap"):
+        merge_cube_batch(batch2, state, **kw)
+    monkeypatch.undo()
+    merge_cube_batch(batch2, state, **kw)  # checkpoint replay
+    got = sorted(tuple(r) for r in spark.read.parquet(state).collect())
+    assert got == [("a", 1), ("b", 5), ("c", 3)]
 
 
 def test_running_user_totals_v2_matches_batch_or_skips(spark, events_dir):
@@ -318,7 +352,7 @@ def test_text_index_ingest_sink_stream_equals_oneshot(spark, tmp_path):
 
     with open(os.path.join(idx, "_batches.json")) as f:
         assert sorted(json.load(f)) == [0, 1]  # both micro-batches landed
-    assert TI._load_meta(idx)["n_docs"] == docs.count()
+    assert indexdir.load_meta(idx)["n_docs"] == docs.count()
     oneshot = str(tmp_path / "one")
     TI.write_text_index(docs, oneshot, n_buckets=16)
     terms = ["data", "model", "learning"]

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from implementation_of_an_etl_process_spark.operators import textindex as TI
 from implementation_of_an_etl_process_spark.operators import tfidf as TF
+from implementation_of_an_etl_process_spark.sources import indexdir
 from tests.conftest import SF_SMOKE
 
 TERMS = ["data", "model", "the", "learning"]
@@ -72,7 +73,7 @@ def test_incremental_equals_oneshot_and_retry_noops(spark, docs, tmp_path):
     oneshot = str(tmp_path / "idx1")
     TI.write_text_index(docs, oneshot, n_buckets=16)
     assert _topk(spark, path) == _topk(spark, oneshot)
-    meta = TI._load_meta(path)
+    meta = indexdir.load_meta(path)
     assert meta["n_docs"] == docs.count()
 
 
@@ -200,15 +201,15 @@ def test_merge_on_read_deletes_exact_and_compaction_applies(
         ref,
         n_buckets=16,
     )
-    assert TI._load_meta(path)["n_docs"] == TI._load_meta(ref)["n_docs"]
-    assert TI._load_meta(path)["total_len"] == TI._load_meta(ref)["total_len"]
+    assert indexdir.load_meta(path)["n_docs"] == indexdir.load_meta(ref)["n_docs"]
+    assert indexdir.load_meta(path)["total_len"] == indexdir.load_meta(ref)["total_len"]
     got = _topk(spark, path)
     assert got == _topk(spark, ref)
     assert not any(r[0] % 7 == 0 for r in got)
     # idempotence: re-deleting and deleting unknown ids change nothing
     again = TI.delete_from_text_index(spark, path, victims + [10 ** 12])
     assert again["deleted_docs"] == 0
-    assert TI._load_meta(path)["n_docs"] == TI._load_meta(ref)["n_docs"]
+    assert indexdir.load_meta(path)["n_docs"] == indexdir.load_meta(ref)["n_docs"]
     # compaction applies tombstones physically
     stats = TI.compact_text_index(spark, path)
     assert not os.path.exists(os.path.join(path, "_deletes"))
@@ -227,6 +228,22 @@ def test_merge_on_read_deletes_exact_and_compaction_applies(
         TI.delete_from_text_index(spark, path, [1])
 
 
+def test_unresolvable_delete_leaves_no_marker(spark, docs, tmp_path):
+    """A delete whose id frame has no doc_id column fails before it
+    takes the writer marker: nothing is left behind, and queries answer
+    exactly as before instead of refusing a wedged index."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "idx")
+    TI.write_text_index(docs, path, n_buckets=16)
+    before = _topk(spark, path)
+    bad = spark.createDataFrame([(1,)], "id long")
+    with pytest.raises(AnalysisException):
+        TI.delete_from_text_index(spark, path, bad)
+    assert not os.path.exists(os.path.join(path, "_pending_append"))
+    assert _topk(spark, path) == before
+
+
 def test_overwrite_rebuild_clears_stale_tombstones(spark, docs, tmp_path):
     """A rebuilt index has no tombstones: stale `_deletes` surviving an
     overwrite would filter freshly-written postings while the delete
@@ -241,7 +258,7 @@ def test_overwrite_rebuild_clears_stale_tombstones(spark, docs, tmp_path):
     assert os.path.exists(os.path.join(path, "_deletes"))
     TI.write_text_index(docs, path, n_buckets=16)  # rebuild
     assert not os.path.exists(os.path.join(path, "_deletes"))
-    assert TI._load_meta(path)["n_docs"] == docs.count()
+    assert indexdir.load_meta(path)["n_docs"] == docs.count()
     got = _topk(spark, path)
     fresh = str(tmp_path / "fresh")
     TI.write_text_index(docs, fresh, n_buckets=16)
@@ -261,23 +278,23 @@ def test_delete_empty_doc_decrements_n_docs(spark, docs, tmp_path):
     )
     path = str(tmp_path / "idx")
     TI.write_text_index(with_empty, path, n_buckets=16)
-    meta = TI._load_meta(path)
+    meta = indexdir.load_meta(path)
     assert meta["n_docs"] == docs.count() + 2
     out = TI.delete_from_text_index(spark, path, [990001, 990002])
     assert out == {"deleted_docs": 2, "deleted_tokens": 0}
-    meta = TI._load_meta(path)
+    meta = indexdir.load_meta(path)
     assert meta["n_docs"] == docs.count()
     rebuilt = str(tmp_path / "idx_rebuilt")
     TI.write_text_index(docs, rebuilt, n_buckets=16)
     assert _topk(spark, path) == _topk(spark, rebuilt)
-    assert TI._load_meta(path)["total_len"] == TI._load_meta(rebuilt)[
+    assert indexdir.load_meta(path)["total_len"] == indexdir.load_meta(rebuilt)[
         "total_len"
     ]
     # idempotence: re-deleting the same ids is a no-op (membership rows
     # were dropped on the first delete)
     out2 = TI.delete_from_text_index(spark, path, [990001, 990002])
     assert out2 == {"deleted_docs": 0, "deleted_tokens": 0}
-    assert TI._load_meta(path)["n_docs"] == docs.count()
+    assert indexdir.load_meta(path)["n_docs"] == docs.count()
     # mixed delete: one posting-backed + one empty, in one call
     path2 = str(tmp_path / "idx2")
     TI.write_text_index(with_empty, path2, n_buckets=16)
@@ -290,11 +307,13 @@ def test_delete_empty_doc_decrements_n_docs(spark, docs, tmp_path):
         rebuilt2,
         n_buckets=16,
     )
-    assert TI._load_meta(path2)["n_docs"] == TI._load_meta(rebuilt2)["n_docs"]
+    assert indexdir.load_meta(path2)["n_docs"] == indexdir.load_meta(rebuilt2)["n_docs"]
     assert _topk(spark, path2) == _topk(spark, rebuilt2)
 
 
-def test_delete_crash_leaves_torn_state_guard(spark, docs, tmp_path):
+def test_delete_crash_leaves_torn_state_guard(
+    spark, docs, tmp_path, monkeypatch
+):
     """Advice r11 (medium): the delete marker used to be released
     unconditionally in `finally` — a failure between the tombstone
     append and the meta adjustment silently skewed BM25 stats. Now a
@@ -302,9 +321,14 @@ def test_delete_crash_leaves_torn_state_guard(spark, docs, tmp_path):
     and write hits the loud torn-state error."""
     path = str(tmp_path / "idx")
     TI.write_text_index(docs, path, n_buckets=16)
-    bad_ids = spark.createDataFrame([(1,)], "not_doc_id long")
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash before the meta adjustment")
+
+    monkeypatch.setattr(indexdir, "write_meta", boom)
     with pytest.raises(Exception):
-        TI.delete_from_text_index(spark, path, bad_ids)
+        TI.delete_from_text_index(spark, path, [docs.first()["doc_id"]])
+    monkeypatch.undo()
     assert os.path.exists(os.path.join(path, "_pending_append"))
     with pytest.raises(ValueError, match="_pending_append"):
         TI.bm25_query_index(spark, path, TERMS, k=5)
@@ -574,16 +598,15 @@ def test_marker_acquisition_is_atomic_across_threads(tmp_path):
     index's (advice r11: its check-then-open was racy)."""
     import threading
 
-    from implementation_of_an_etl_process_spark.operators.dedup import (
-        _acquire_dedup_marker,
-    )
-
     for acquire, release_path in (
         (
-            lambda d: TI._acquire_marker(os.path.join(d, "_pending_append")),
+            lambda d: indexdir.acquire_marker(os.path.join(d, "_pending_append")),
             "_pending_append",
         ),
-        (_acquire_dedup_marker, "_pending_append"),
+        (
+            lambda d: indexdir.acquire_marker(os.path.join(d, "_pending_append")),
+            "_pending_append",
+        ),
     ):
         d = str(tmp_path / f"idx{acquire.__name__ if hasattr(acquire, '__name__') else 'x'}")
         os.makedirs(d, exist_ok=True)

@@ -125,7 +125,7 @@ def main() -> None:
         f"files in {t_comp:.1f}s -> probe {t_post:.1f}s; "
         f"post-compaction identical={got2 == want2}"
     )
-    n_docs_meta = TI._load_meta(idx)["n_docs"]
+    n_docs_meta = TI.text_index_stats(idx)["n_docs"]
     print(f"meta n_docs={n_docs_meta} "
           f"(expect ~{int(N_DOCS * 159 / 160)}: slices 1..159)")
 
