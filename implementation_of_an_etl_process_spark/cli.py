@@ -70,7 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.monotonic()
     from pyspark.sql import SparkSession
 
-    from implementation_of_an_etl_process_spark import get_spark
+    from implementation_of_an_etl_process_spark import class_archive, get_spark
 
     # getOrCreate may hand us a session some host process (notebook,
     # test harness) already owns — only stop what we created.
@@ -91,7 +91,8 @@ def main(argv: list[str] | None = None) -> int:
         master=f"local[{args.threads}]",
         shuffle_partitions=args.shuffle_partitions or args.threads * 4,
     )
-    log(1, f"session up in {time.monotonic() - t0:.1f}s ({args.threads} threads)")
+    log(1, f"session up in {time.monotonic() - t0:.1f}s ({args.threads} threads, "
+           f"class archive {class_archive.decision()})")
 
     t1 = time.monotonic()
     clients = read_clients(spark, os.path.join(args.data_dir, "clients.csv"))

@@ -607,21 +607,24 @@ def simhash_signature(
         F.col(id_col).alias("_id"),
         F.explode(tokens(text_col)).alias("tok"),
     ).withColumn("h", token_hash)
+    # SQL strings, not Column calls (see minhash_signature): the Column
+    # build of these 64 aggregates and the 64-term fold cost about 10k
+    # py4j round trips per call
     bit_sums = tok.groupBy("_id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-            ).alias(f"b{j}")
+            F.expr(
+                f"sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
+                f" AS b{j}"
+            )
             for j in range(_SIMHASH_BITS)
         ]
     )
-    sig = F.lit(0).cast("long")
-    for j in range(_SIMHASH_BITS):
-        sig = sig + F.when(
-            F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)
-        ).otherwise(F.lit(0).cast("long"))
-    return bit_sums.select("_id", sig.alias("simhash"))
+    sig = " + ".join(
+        f"CASE WHEN b{j} > 0 THEN shiftleft(CAST(1 AS BIGINT), {j})"
+        " ELSE CAST(0 AS BIGINT) END"
+        for j in range(_SIMHASH_BITS)
+    )
+    return bit_sums.selectExpr("_id", f"{sig} AS simhash")
 
 
 def simhash_pairs(

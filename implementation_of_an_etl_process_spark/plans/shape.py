@@ -109,7 +109,15 @@ def spread(
     ``by`` is a subset of a downstream groupBy's keys the aggregation
     reuses this exchange outright (hash partitioning on a key subset
     satisfies the aggregate's ClusteredDistribution), deleting its own
-    Exchange from the plan."""
+    Exchange from the plan.
+
+    A frame whose logical root already shuffles (a ``repartition``,
+    keyed or not) is returned at once, before any physical planning:
+    spreading a spread frame again is a no-op."""
+    root = df._jdf.logicalPlan()  # noqa: SLF001
+    name = root.nodeName()
+    if name == "RepartitionByExpression" or (name == "Repartition" and root.shuffle()):
+        return df
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     if _RUNS_JOBS.search(plan):
         return df

@@ -16,6 +16,11 @@ must be importable by the workers: its root is the working directory,
 on ``PYTHONPATH`` or in site-packages. The invoice decoder needs the
 same, since its closure refers to ``sources.binary`` by name. Where the
 package is not on that path, the session keeps PySpark's stock daemon.
+
+Driver JVM: a local session maps a class-data-sharing archive of the
+classes an earlier run loaded, or dumps one when its JVM exits
+(``class_archive``); ``class_archive.decision()`` says which, or why
+neither.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import site
 
 from pyspark.sql import DataFrame, SparkSession
 
+from implementation_of_an_etl_process_spark import class_archive
 from implementation_of_an_etl_process_spark.plans.shape import (
     LATENCY_MODE_SHUFFLE_PARTITIONS,
 )
@@ -219,13 +225,24 @@ def get_spark(
     # documented hook for host-specific tuning (shuffle codec, adaptive
     # thresholds) and for A/B measurement without code edits — explicit
     # extra_conf still wins below.
+    caller_conf = {}
     for pair in os.environ.get("SPARK_GRAFT_CONF", "").split(";"):
         if "=" in pair:
             k, _, v = pair.partition("=")
             if k.strip():
-                builder = builder.config(k.strip(), v.strip())
-    for k, v in (extra_conf or {}).items():
+                caller_conf[k.strip()] = v.strip()
+    caller_conf.update(extra_conf or {})
+    for k, v in caller_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # The driver JVM maps the class-data-sharing archive of an earlier
+    # run, or dumps one at exit (see class_archive).
+    caller_options = caller_conf.get(class_archive.JAVA_OPTIONS, "")
+    archive = class_archive.plan(master, caller_options)
+    if archive and archive.java_options:
+        builder = builder.config(
+            class_archive.JAVA_OPTIONS,
+            f"{caller_options} {archive.java_options}".strip(),
+        )
+    spark = class_archive.launch(archive, builder.getOrCreate)
     spark.sparkContext.setLogLevel("WARN")
     return spark

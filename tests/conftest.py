@@ -39,6 +39,23 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def py4j_commands(spark, monkeypatch):
+    """The py4j commands this process sends the JVM during the test,
+    as py4j writes them (a method call is ``c``, the target and the
+    method name, one per line)."""
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    sent = []
+    send = client.send_command
+
+    def record(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", record)
+    return sent
+
+
 @pytest.fixture(scope="session")
 def ref_sample(tmp_path_factory) -> str:
     """Directory with the reference layout: clients.csv, contracts.csv

@@ -5,8 +5,14 @@ against an independent DuckDB + numpy oracle, byte-semantics included
 
 from __future__ import annotations
 
-from implementation_of_an_etl_process_spark import cli
+import os
+import subprocess
+import sys
+
+from implementation_of_an_etl_process_spark import class_archive, cli
 from tests.test_hypercube_golden import oracle_cube
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_reference_format_end_to_end(ref_sample, tmp_path):
@@ -22,7 +28,39 @@ def test_cli_reference_format_end_to_end(ref_sample, tmp_path):
         ]
     )
     assert rc == 0
+    _check_reference_cube(ref_sample, out)
 
+
+def test_cli_process_survives_a_garbage_class_archive(ref_sample, tmp_path):
+    """A fresh CLI process whose published class archive is garbage:
+    the JVM maps it, turns class sharing off and runs on, so the output
+    is the same reference-format cube."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    java = class_archive.java_binary()
+    key = class_archive.key(java, os.path.join(_find_spark_home(), "jars"))
+    cache = tmp_path / "cache"
+    home = cache / class_archive.CACHE_DIR / key
+    home.mkdir(parents=True)
+    (home / class_archive.PUBLISHED).write_bytes(os.urandom(4096))
+    env = dict(
+        os.environ, XDG_CACHE_HOME=str(cache), PYTHONPATH=ROOT,
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    env.pop("SPARK_CONF_DIR", None)
+    out = str(tmp_path / "cube.csv")
+    done = subprocess.run(
+        [sys.executable, "-m", "implementation_of_an_etl_process_spark.cli",
+         "--data-dir", ref_sample, "--output", out, "--reference-format",
+         "-l", "1", "-t", "4"],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert f"class archive used {home / class_archive.PUBLISHED}" in done.stderr
+    _check_reference_cube(ref_sample, out)
+
+
+def _check_reference_cube(ref_sample, out):
     oracle = oracle_cube(ref_sample)
 
     with open(out) as fh:

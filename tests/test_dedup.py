@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from implementation_of_an_etl_process_spark.functions.text_exprs import tokens
 from implementation_of_an_etl_process_spark.operators import dedup as D
 
 BASE = (
@@ -313,6 +314,56 @@ def test_minhash_bucket_values_cannot_drift(spark, n_hashes, bands):
     got_rows = sorted(got.collect())
     assert len(got_rows) == bands * sig.count()
     assert got_rows == sorted(want.collect())
+
+
+def _column_api_simhash(docs, hash_fn):
+    """``simhash_signature`` as the Column API built it before the SQL
+    string build: the oracle for its values."""
+    token_hash = (
+        D.portable_hash64(F.col("tok")) if hash_fn == "md5" else F.xxhash64("tok")
+    )
+    tok = docs.select(
+        F.col("doc_id").alias("_id"), F.explode(tokens("text")).alias("tok")
+    ).withColumn("h", token_hash)
+    bit_sums = tok.groupBy("_id").agg(
+        *[
+            F.sum(
+                F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)
+                .otherwise(-1)
+            ).alias(f"b{j}")
+            for j in range(64)
+        ]
+    )
+    sig = F.lit(0).cast("long")
+    for j in range(64):
+        sig = sig + F.when(
+            F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)
+        ).otherwise(F.lit(0).cast("long"))
+    return bit_sums.select("_id", sig.alias("simhash"))
+
+
+@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
+def test_simhash_values_cannot_drift(spark, py4j_commands, hash_fn):
+    """Signatures equal the Column-API build's on a seeded corpus, and
+    the SQL-string build stays cheap to plan (the Column build sent
+    about 10k py4j commands)."""
+    import random
+
+    rng = random.Random(21)
+    words = [f"w{i}" for i in range(60)]
+    rows = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randint(1, 25))))
+        for i in range(300)
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    del py4j_commands[:]
+    sig = D.simhash_signature(docs, "doc_id", "text", hash_fn=hash_fn)
+    assert len(py4j_commands) < 1000
+    want = _column_api_simhash(docs, hash_fn)
+    assert sig.dtypes == want.dtypes
+    got = sorted(sig.collect())
+    assert got == sorted(want.collect())
+    assert len({r.simhash for r in got}) > 250  # the bits really vary
 
 
 def test_simhash_identical_and_near(docs):

@@ -445,7 +445,8 @@ def test_ingest_batch_verdict_writer_runs_before_append(spark, tmp_path):
         r.doc_id: r.verdict for r in spark.read.parquet(sink).collect()
     }
     assert persisted == {2: "exact", 3: "novel"}
-    # the crash happened before _begin_index_append: no marker, no rows
+    # the crash happened before the append took the writer marker
+    # (indexdir.writer): no marker, no rows
     assert not os.path.exists(os.path.join(idx, "_pending_append"))
     assert (
         spark.read.parquet(os.path.join(idx, "md5")).count() == md5_before

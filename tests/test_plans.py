@@ -378,6 +378,24 @@ def test_spread_starts_no_job(spark, tmp_path):
     assert spread(scan).rdd.getNumPartitions() == sc.defaultParallelism
 
 
+def test_spread_of_a_spread_frame_plans_nothing(spark, py4j_commands):
+    """A frame whose logical root already repartitions comes back as
+    is, before any physical planning; a coalesced frame (a repartition
+    without a shuffle) is still spread."""
+    from implementation_of_an_etl_process_spark.plans import spread
+
+    narrow = spark.range(100).coalesce(1)
+    once = spread(narrow, min_partitions=4)
+    assert once.rdd.getNumPartitions() == 4
+    keyed = spread(narrow, min_partitions=4, by=["id"])
+    assert keyed.rdd.getNumPartitions() == 4
+    del py4j_commands[:]
+    assert spread(once) is once
+    assert spread(keyed, by=["id"]) is keyed
+    assert py4j_commands
+    assert not any("\nexecutedPlan\n" in c for c in py4j_commands)
+
+
 def test_minhash_latency_gate_and_conf_restoration(spark):
     """The minhash guard's latency path (small PROVEN input -> AQE off
     for internal materializations) must leave the session conf exactly
